@@ -375,7 +375,7 @@ class DeepProviderGenerator(TimeSeriesGenerator):
         )
         drop_cols = [c for c in group_cols if c not in declared]
 
-        def train_sample(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def train_sample(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             pdf = pdf.drop(columns=[c for c in drop_cols if c in pdf.columns])
             sequences = runner(pdf, kwargs, n, seed)
             rows = []

@@ -1862,6 +1862,11 @@ def covariance_matrix(
     size. Cross-engine parity: COVAR_POP differs from a SQL replay in
     last-ulp summation only, hidden behind the output rounding (the
     ev1 least-squares precedent).
+
+    Ragged input: the width is the FIRST row's vector size. Elements
+    past it in longer rows are ignored. Shorter rows feed only the
+    (i, j) pairs they cover, so a pair no row covers is ABSENT from
+    the output rather than a NULL-cov row.
     """
     width = _vector_width(df, vector_column)
     v = F.transform(F.col(vector_column), lambda x: x.cast("double"))
@@ -1881,7 +1886,11 @@ def covariance_matrix(
             "i",
             "xi",
             F.posexplode(
-                F.slice(F.col("_v"), F.col("i") + 1, F.lit(width) - F.col("i"))
+                F.slice(
+                    F.col("_v"),
+                    F.col("i") + 1,
+                    F.greatest(F.lit(0), F.lit(width) - F.col("i")),
+                )
             ).alias("_dj", "xj"),
         )
         .select("i", (F.col("i") + F.col("_dj")).alias("j"), "xi", "xj")

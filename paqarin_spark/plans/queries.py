@@ -142,20 +142,6 @@ def _stream_state_partition_count(spark: SparkSession, sf_dir: str, tables) -> i
     return max(cores, -(-total // max(advisory, 1)))
 
 
-@contextmanager
-def _scaled_state_partitions(spark: SparkSession, sf_dir: str, tables=("events",)):
-    """`_bounded_state_partitions` for unbounded-key streams: same
-    set/restore discipline, with the count derived from input volume
-    by :func:`_stream_state_partition_count` instead of a declared
-    key-domain bound. Wraps only the ``start()``/``awaitTermination``
-    window, so batch plans in the same session keep the session
-    fanout."""
-    with _bounded_state_partitions(
-        spark, _stream_state_partition_count(spark, sf_dir, tables)
-    ):
-        yield
-
-
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure_for_determinism(spark)
     return read_table(spark, sf_dir, "events")
@@ -5968,16 +5954,8 @@ def st11_stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = "st11_stream_quantile_sketch"
     # state rows bounded by construction — cap the keyed exchange
-    with _bounded_state_partitions(spark, 8):
-        q = (
-            sk.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    final = latest_sketch_version(spark.table(name), ["event_type"])
+    sink = _run_to_memory(spark, sk, name, "append", 8)
+    final = latest_sketch_version(sink, ["event_type"])
     return quantile_estimate_from_sketch(
         final, [0.5, 0.9, 0.99], group_by=["event_type"]
     ).orderBy("event_type")
@@ -6031,16 +6009,15 @@ def st12_stream_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _events_stream(spark, sf_dir)
     emi = stream_cohort_offsets(stream)
     name = "st12_stream_cohort"
-    with _scaled_state_partitions(spark, sf_dir, ("events",)):
-        q = (
-            emi.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return cohort_retention_from_emissions(spark.table(name))
+    sink = _run_to_memory(
+        spark, emi, name, "append",
+        _stream_state_partition_count(spark, sf_dir, ("events",)),
+    )
+    return cohort_retention_from_emissions(sink)
+
+
+# st12 is the streaming dual of q82 and carries q82's batch oracle.
+ST12_SQL = Q82_SQL
 
 
 def tx38_fuzzy_supplier_match(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6875,18 +6852,12 @@ def st13_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         how="left_outer",
     )
     name = "st13_stream_left_join"
-    with _scaled_state_partitions(spark, sf_dir, ("events",)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sink = _run_to_memory(
+        spark, out, name, "append",
+        _stream_state_partition_count(spark, sf_dir, ("events",)),
+    )
     return (
-        spark.table(name)
-        .where(F.col("click_ts") < F.lit("2024-01-28").cast("timestamp"))
+        sink.where(F.col("click_ts") < F.lit("2024-01-28").cast("timestamp"))
         .groupBy(F.date_format("click_ts", "yyyy-MM-dd").alias("day"))
         .agg(
             F.count("purchase_id").alias("n_attributed"),
@@ -7548,6 +7519,27 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
+def _run_to_memory(
+    spark: SparkSession, frame: DataFrame, name: str, mode: str, partitions: int
+) -> DataFrame:
+    """Run the streaming ``frame`` to completion into the memory sink
+    table ``name`` (``mode`` output, Trigger.AvailableNow) and return
+    that table. ``partitions`` caps the stateful exchange for the
+    ``start()``/``awaitTermination`` window only: a declared key-domain
+    bound for bounded-key state, or
+    :func:`_stream_state_partition_count` for unbounded keys."""
+    with _bounded_state_partitions(spark, partitions):
+        (
+            frame.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    return spark.table(name)
+
+
 # --------------------------------------------------------------------------
 # ST1 — streaming daily sum (Structured Streaming dual of op D1)
 
@@ -7566,16 +7558,11 @@ def st1_stream_daily_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _events_stream(spark, sf_dir)
     out = stream_time_bucket_sum(stream, EVENTS_SCHEMA, watermark="1 day")
     name = "st1_stream_daily_sum"
-    with _scaled_state_partitions(spark, sf_dir, ("events",)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    sink = _run_to_memory(
+        spark, out, name, "complete",
+        _stream_state_partition_count(spark, sf_dir, ("events",)),
+    )
+    return sink.select(
         "user_id",
         F.date_format("bucket", "yyyy-MM-dd").alias("day"),
         F.round("value", 6).alias("sum_value"),
@@ -7607,16 +7594,11 @@ def st2_stream_window_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _events_stream(spark, sf_dir)
     out = stream_sliding_windows(stream, EVENTS_SCHEMA, sequence_length=8)
     name = "st2_stream_window_sums"
-    with _scaled_state_partitions(spark, sf_dir, ("events",)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    sink = _run_to_memory(
+        spark, out, name, "append",
+        _stream_state_partition_count(spark, sf_dir, ("events",)),
+    )
+    return sink.select(
         "user_id",
         "sequence_id",
         F.round(
@@ -7657,16 +7639,8 @@ def st4_stream_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stream_running_minmax(stream, EVENTS_SCHEMA)
     name = "st4_stream_minmax"
     # ONE state row total — a wide state exchange is pure overhead
-    with _bounded_state_partitions(spark, 4):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    sink = _run_to_memory(spark, out, name, "complete", 4)
+    return sink.select(
         F.round("min_value", 6).alias("min_value"),
         F.round("max_value", 6).alias("max_value"),
     )
@@ -7700,16 +7674,11 @@ def st5_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = stream_keep_first(stream, day_schema, watermark="1 day")
     name = "st5_stream_dedup"
-    with _scaled_state_partitions(spark, sf_dir, ("events",)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    sink = _run_to_memory(
+        spark, out, name, "append",
+        _stream_state_partition_count(spark, sf_dir, ("events",)),
+    )
+    return sink.select(
         "user_id", F.date_format("day", "yyyy-MM-dd").alias("day")
     )
 
@@ -7740,16 +7709,11 @@ def st6_stream_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, "ts", "user_id", window_duration="1 day", watermark="1 day"
     )
     name = "st6_stream_daily_users"
-    with _scaled_state_partitions(spark, sf_dir, ("events",)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    sink = _run_to_memory(
+        spark, out, name, "append",
+        _stream_state_partition_count(spark, sf_dir, ("events",)),
+    )
+    return sink.select(
         F.date_format("window_start", "yyyy-MM-dd").alias("day"), "n_distinct"
     )
 
@@ -7778,16 +7742,11 @@ def st3_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, EVENTS_SCHEMA, gap="12 hours", value_column="value"
     )
     name = "st3_stream_sessions"
-    with _scaled_state_partitions(spark, sf_dir, ("events",)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    sink = _run_to_memory(
+        spark, out, name, "complete",
+        _stream_state_partition_count(spark, sf_dir, ("events",)),
+    )
+    return sink.select(
         "user_id",
         F.date_format("session_start", TS_FMT_SPARK).alias("session_start"),
         F.date_format("session_end", TS_FMT_SPARK).alias("session_end"),
@@ -9303,16 +9262,11 @@ def st7_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="1 day",
     )
     name = "st7_stream_enrich"
-    with _scaled_state_partitions(spark, sf_dir, ("events",)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    sink = _run_to_memory(
+        spark, out, name, "append",
+        _stream_state_partition_count(spark, sf_dir, ("events",)),
+    )
+    return sink.select(
         F.date_format("window_start", "yyyy-MM-dd").alias("day"),
         F.col("c_mktsegment").alias("segment"),
         "n_events",
@@ -9506,16 +9460,11 @@ def st8_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         right_prefix="purchase",
     )
     name = "st8_stream_interval_join"
-    with _scaled_state_partitions(spark, sf_dir, ("events",)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    sink = _run_to_memory(
+        spark, out, name, "append",
+        _stream_state_partition_count(spark, sf_dir, ("events",)),
+    )
+    return sink.select(
         "click_id", "purchase_id", "user_id", "lag_seconds"
     )
 
@@ -9551,19 +9500,9 @@ def st9_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = "st9_stream_hll_distinct"
     # state rows bounded by construction — cap the keyed exchange
-    with _bounded_state_partitions(spark, 16):
-        q = (
-            regs.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sink = _run_to_memory(spark, regs, name, "complete", 16)
     return (
-        hll_estimate_from_registers(
-            spark.table(name), p=10, group_by=["event_type"]
-        )
+        hll_estimate_from_registers(sink, p=10, group_by=["event_type"])
         .select(
             "event_type", F.round("n_distinct_est", 4).alias("est_users")
         )
@@ -9616,15 +9555,7 @@ def st10_stream_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     counters = stream_count_min(stream, "event_type", depth=4, width=512)
     name = "st10_stream_count_min"
     # state rows bounded by construction — cap the keyed exchange
-    with _bounded_state_partitions(spark, 16):
-        q = (
-            counters.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sink = _run_to_memory(spark, counters, name, "complete", 16)
     ev = _events(spark, sf_dir)
     true_counts = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_true")
@@ -9641,9 +9572,7 @@ def st10_stream_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
         _cm_bucket(F.col("row"), F.col("event_type"), 512).alias("bucket"),
     )
     return (
-        probes.join(
-            F.broadcast(spark.table(name)), on=["row", "bucket"], how="left"
-        )
+        probes.join(F.broadcast(sink), on=["row", "bucket"], how="left")
         .groupBy("event_type", "n_true")
         .agg(
             F.min(F.coalesce(F.col("counter"), F.lit(0)))
@@ -10987,16 +10916,11 @@ def st14_stream_view_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _events_stream(spark, sf_dir)
     emi = stream_view_rollup(stream)
     name = "st14_stream_view_rollup"
-    with _scaled_state_partitions(spark, sf_dir, ("events",)):
-        q = (
-            emi.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return view_from_emissions(spark.table(name)).orderBy("user_id")
+    sink = _run_to_memory(
+        spark, emi, name, "append",
+        _stream_state_partition_count(spark, sf_dir, ("events",)),
+    )
+    return view_from_emissions(sink).orderBy("user_id")
 
 
 ST14_SQL = """
@@ -11678,17 +11602,12 @@ def st15_stream_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _events_stream(spark, sf_dir)
     emi = stream_latest_per_key(stream)
     name = "st15_stream_latest"
-    with _scaled_state_partitions(spark, sf_dir, ("events",)):
-        q = (
-            emi.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sink = _run_to_memory(
+        spark, emi, name, "append",
+        _stream_state_partition_count(spark, sf_dir, ("events",)),
+    )
     return (
-        latest_from_emissions(spark.table(name))
+        latest_from_emissions(sink)
         .withColumnRenamed("k", "user_id")
         .orderBy("user_id")
     )
@@ -11730,14 +11649,14 @@ def _remove_at_exit(path: str) -> None:
 
 
 def _sweep_stale_staging(prefix: str) -> None:
-    """Remove /tmp staging dirs named ``<prefix>..._<pid>`` whose pid
-    is no longer alive — bounds accumulation across crashed or killed
-    runs to the set of LIVE processes."""
+    """Remove temp-dir staging dirs named ``<prefix>..._<pid>`` whose
+    pid is no longer alive — bounds accumulation across crashed or
+    killed runs to the set of LIVE processes."""
     import glob
-    import os
     import shutil
+    import tempfile
 
-    for d in glob.glob(f"/tmp/{prefix}*"):
+    for d in glob.glob(os.path.join(tempfile.gettempdir(), f"{prefix}*")):
         pid_part = d.rsplit("_", 1)[-1]
         if not pid_part.isdigit() or int(pid_part) == os.getpid():
             continue
@@ -11747,6 +11666,23 @@ def _sweep_stale_staging(prefix: str) -> None:
             shutil.rmtree(d, ignore_errors=True)
         except PermissionError:
             pass  # pid alive under another uid — leave it
+
+
+def _staging_dir(prefix: str, sf_dir: str) -> str:
+    """Process-private staging dir ``<tmp>/<prefix><md5(sf_dir)>_<pid>``
+    for a sink/source round-trip. The pid keeps two processes auditing
+    or benching the same ``sf_dir`` from overwriting each other; repeat
+    calls in ONE process get the same dir (overwrite write modes, or a
+    reused checkpoint), dirs of dead pids are swept first, and this
+    process's dir is removed at exit — staging never accumulates."""
+    import hashlib
+    import tempfile
+
+    _sweep_stale_staging(prefix)
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+    path = os.path.join(tempfile.gettempdir(), f"{prefix}{tag}_{os.getpid()}")
+    _remove_at_exit(path)
+    return path
 
 
 def q97_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11759,10 +11695,7 @@ def q97_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical binary, the property interchange corpora rely on).
 
     Scale shape: one partitioned JSON write + scan, one day×type
-    rollup with decimal-exact sums."""
-    import hashlib
-    import os
-
+    rollup with decimal-exact sums; staging via :func:`_staging_dir`."""
     from paqarin_spark.sources import read_jsonl, write_jsonl
 
     configure_for_determinism(spark)
@@ -11772,15 +11705,7 @@ def q97_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
     )
-    # pid in the path: two processes auditing/benching the same
-    # sf_dir must not overwrite each other's round-trip staging.
-    # Repeat invocations in ONE process reuse the same dir (overwrite
-    # write mode), dirs from dead pids are swept on entry, and this
-    # process's dir is removed at exit — staging never accumulates.
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    _sweep_stale_staging("paqarin_q97_")
-    path = os.path.join("/tmp", f"paqarin_q97_{tag}_{os.getpid()}")
-    _remove_at_exit(path)
+    path = _staging_dir("paqarin_q97_", sf_dir)
     write_jsonl(staged, path)
     back = read_jsonl(
         spark, path, schema="day string, event_type string, value double"
@@ -12701,17 +12626,9 @@ def st16_stream_leaderboard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = "st16_stream_leaderboard"
     # state rows bounded by construction — cap the keyed exchange
-    with _bounded_state_partitions(spark, 8):
-        q = (
-            emi.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sink = _run_to_memory(spark, emi, name, "append", 8)
     return (
-        leaderboard_from_emissions(spark.table(name))
+        leaderboard_from_emissions(sink)
         .withColumnRenamed("g", "event_type")
         .orderBy("event_type", "rank")
     )
@@ -13434,16 +13351,11 @@ def st17_stream_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emi = stream_classify_counts(stream, scoring, "text")
     name = "st17_stream_classify"
-    with _scaled_state_partitions(spark, sf_dir, ("documents",)):
-        q = (
-            emi.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return class_counts_from_emissions(spark.table(name)).orderBy("label")
+    sink = _run_to_memory(
+        spark, emi, name, "append",
+        _stream_state_partition_count(spark, sf_dir, ("documents",)),
+    )
+    return class_counts_from_emissions(sink).orderBy("label")
 
 
 ST17_SQL = f"""
@@ -14471,16 +14383,11 @@ def st18_stream_ewma_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emi = stream_ewma_anomaly(stream, warmup=5, threshold=100.0)
     name = "st18_stream_ewma_anomaly"
-    with _scaled_state_partitions(spark, sf_dir, ("events",)):
-        q = (
-            emi.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return ewma_from_emissions(spark.table(name)).orderBy("user_id")
+    sink = _run_to_memory(
+        spark, emi, name, "append",
+        _stream_state_partition_count(spark, sf_dir, ("events",)),
+    )
+    return ewma_from_emissions(sink).orderBy("user_id")
 
 
 ST18_SQL = """
@@ -14794,18 +14701,8 @@ def st19_stream_phrase_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = "st19_stream_phrase_hits"
     # the stateful exchange holds ≤|blocklist| keys forever — cap its
     # width instead of inheriting the session's full shuffle fanout
-    with _bounded_state_partitions(spark, 8):
-        q = (
-            emi.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return phrase_hits_from_emissions(
-        spark.table(name), TX49_BLOCKLIST
-    ).orderBy("phrase")
+    sink = _run_to_memory(spark, emi, name, "append", 8)
+    return phrase_hits_from_emissions(sink, TX49_BLOCKLIST).orderBy("phrase")
 
 
 ST19_SQL = """
@@ -15872,16 +15769,11 @@ def st23_stream_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "st23_stream_funnel"
-    with _scaled_state_partitions(spark, sf_dir, ("events",)):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    per_sess = spark.table(name).select(
+    sink = _run_to_memory(
+        spark, agg, name, "complete",
+        _stream_state_partition_count(spark, sf_dir, ("events",)),
+    )
+    per_sess = sink.select(
         (F.weekday("_start") + 1).cast("long").alias("isodow"),
         (
             F.col("_mc").isNotNull()
@@ -16590,11 +16482,8 @@ def q107_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources.write_orc, read back through sources.read_orc with an
     explicit schema, and rolled up ship-day × returnflag — while the
     ORACLE aggregates the ORIGINAL parquet, so the hash match proves
-    doubles survive the ORC round-trip bit-exactly. Same staging
-    hygiene as q97 (pid-scoped dir, stale sweep, exit cleanup)."""
-    import hashlib
-    import os
-
+    doubles survive the ORC round-trip bit-exactly. Staging via
+    :func:`_staging_dir` (pid-scoped dir, stale sweep, exit cleanup)."""
     from paqarin_spark.sources import read_orc, write_orc
 
     configure_for_determinism(spark)
@@ -16605,10 +16494,7 @@ def q107_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_quantity",
         "l_extendedprice",
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    _sweep_stale_staging("paqarin_q107_")
-    path = os.path.join("/tmp", f"paqarin_q107_{tag}_{os.getpid()}")
-    _remove_at_exit(path)
+    path = _staging_dir("paqarin_q107_", sf_dir)
     write_orc(staged, path)
     back = read_orc(
         spark,
@@ -16886,11 +16772,8 @@ def q112_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates the ORIGINAL parquet, so the hash match proves doubles
     survive the text round-trip bit-exactly (Spark writes shortest
     round-trip decimal representations; reading them back under a
-    double schema reproduces the exact IEEE values). Same staging
-    hygiene as q97/q107 (pid-scoped dir, stale sweep, exit cleanup)."""
-    import hashlib
-    import os
-
+    double schema reproduces the exact IEEE values). Staging via
+    :func:`_staging_dir` (pid-scoped dir, stale sweep, exit cleanup)."""
     from paqarin_spark.sources import read_csv, write_csv
 
     configure_for_determinism(spark)
@@ -16900,10 +16783,7 @@ def q112_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
         "o_totalprice",
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    _sweep_stale_staging("paqarin_q112_")
-    path = os.path.join("/tmp", f"paqarin_q112_{tag}_{os.getpid()}")
-    _remove_at_exit(path)
+    path = _staging_dir("paqarin_q112_", sf_dir)
     write_csv(staged, path)
     back = read_csv(
         spark,
@@ -17075,11 +16955,8 @@ def st20_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     the files stay correct — idempotence is the sink contract.
 
     Scale shape: stateless stream (no state store), file commits per
-    micro-batch; the q97 staging hygiene (pid-scoped dirs, stale
-    sweep, exit cleanup)."""
-    import hashlib
-    import os
-
+    micro-batch; staging via :func:`_staging_dir` (pid-scoped dirs,
+    stale sweep, exit cleanup)."""
     configure_for_determinism(spark)
     stream = _events_stream(spark, sf_dir)
     staged = stream.select(
@@ -17087,11 +16964,10 @@ def st20_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "value",
     )
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    _sweep_stale_staging("paqarin_st20_")
-    base = os.path.join("/tmp", f"paqarin_st20_{tag}_{os.getpid()}")
-    _remove_at_exit(base)
-    with _scaled_state_partitions(spark, sf_dir, ("events",)):
+    base = _staging_dir("paqarin_st20_", sf_dir)
+    with _bounded_state_partitions(
+        spark, _stream_state_partition_count(spark, sf_dir, ("events",))
+    ):
         q = (
             staged.writeStream.format("parquet")
             .option("path", os.path.join(base, "out"))
@@ -18092,18 +17968,10 @@ def st21_stream_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emi = stream_bin_counts(stream, "value", edges)
     name = "st21_stream_psi"
-    with _bounded_state_partitions(spark, 8):
-        q = (
-            emi.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    cur = bin_counts_from_emissions(
-        spark.table(name), len(edges) + 1
-    ).select("bin", F.col("n").alias("n_cur"))
+    sink = _run_to_memory(spark, emi, name, "append", 8)
+    cur = bin_counts_from_emissions(sink, len(edges) + 1).select(
+        "bin", F.col("n").alias("n_cur")
+    )
     joined = (
         cur.join(ref_counts, "bin", "left")
         .select(
@@ -18160,16 +18028,8 @@ def st25_stream_jsd(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     emi = stream_key_counts(stream, "event_type")
     name = "st25_stream_jsd"
-    with _bounded_state_partitions(spark, 8):
-        q = (
-            emi.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    cur = key_counts_from_emissions(spark.table(name)).select(
+    sink = _run_to_memory(spark, emi, name, "append", 8)
+    cur = key_counts_from_emissions(sink).select(
         F.col("key").alias("event_type"), F.col("n").alias("n_cur")
     )
     counts = ref_counts.join(cur, "event_type", "full_outer").select(
@@ -18285,18 +18145,12 @@ def st22_stream_sessions_close(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_value_sum=True,
     )
     name = "st22_stream_sessions_close"
-    with _scaled_state_partitions(spark, sf_dir, ("events",)):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sink = _run_to_memory(
+        spark, out, name, "complete",
+        _stream_state_partition_count(spark, sf_dir, ("events",)),
+    )
     return (
-        spark.table(name)
-        .select(
+        sink.select(
             "user_id",
             F.date_format(
                 "session_start", "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -19762,20 +19616,15 @@ def st24_stream_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = "st24_stream_decontamination"
-    with _scaled_state_partitions(spark, sf_dir, ("embeddings",)):
-        q = (
-            hits.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    sink = _run_to_memory(
+        spark, hits, name, "complete",
+        _stream_state_partition_count(spark, sf_dir, ("embeddings",)),
+    )
     probes = emb.where(F.col("vec_id") % 13 == 0).select(
         F.col("vec_id").alias("bench_id")
     )
     return (
-        probes.join(spark.table(name), on="bench_id", how="left")
+        probes.join(sink, on="bench_id", how="left")
         .select(
             F.col("bench_id").cast("long").alias("probe_id"),
             F.coalesce("n_hits", F.lit(0)).cast("long").alias("n_hits"),
@@ -20244,297 +20093,15 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 # gen15 the ARNet feedback rollout — each with frozen md5-init
 # weights shipped into the SQL as literals, so training is provably
 # the ONLY rows-only boundary.
+ROWS_ONLY = frozenset(
+    {"gen6_arnet_sample", "gen10_grunet_sample", "gen12_gan_sample"}
+)
+
+# Every other query's oracle is the module's ``<PREFIX>_SQL`` constant
+# (``q82_cohort_retention`` -> ``Q82_SQL``); a query without one fails
+# at import, so QUERIES and ORACLE_SQL cannot drift apart.
 ORACLE_SQL: dict[str, str] = {
-    "em34_ivfpq_serve": EM34_SQL,
-    "em35_hamming_serve": EM35_SQL,
-    "st24_stream_decontamination": ST24_SQL,
-    "em33_embedding_decontamination": EM33_SQL,
-    "gen14_gan_sample_replay": GEN14_SQL,
-    "gen15_arnet_rollout_replay": GEN15_SQL,
-    "st23_stream_funnel": ST23_SQL,
-    "mm20_png_interlaced": MM20_SQL,
-    "q113_session_funnel": Q113_SQL,
-    "ev29_jensen_shannon": EV29_SQL,
-    "ev30_wasserstein_split": EV30_SQL,
-    "em36_pc_drift": EM36_SQL,
-    "st25_stream_jsd": ST25_SQL,
-    "tx55_winnowing_pairs": TX55_SQL,
-    "tx56_simhash_wide": TX56_SQL,
-    "em32_sq_int8_recall": EM32_SQL,
-    "q112_csv_roundtrip": Q112_SQL,
-    "q111_hits_authorities": Q111_SQL,
-    "tx54_heaps_fit": TX54_SQL,
-    "ev28_cramer_von_mises": EV28_SQL,
-    "st22_stream_sessions_close": ST22_SQL,
-    "gen13_gru_rollout_replay": GEN13_SQL,
-    "ev23_kendall_tau": EV23_SQL,
-    "q110_trailing_dau_hll": Q110_SQL,
-    "st21_stream_psi": ST21_SQL,
-    "mm19_png_gif_transcode": MM19_SQL,
-    "q109_kmv_intersection": Q109_SQL,
-    "ev27_psi_drift": EV27_SQL,
-    "q108_repeat_customers": Q108_SQL,
-    "ev26_crps_ensemble": EV26_SQL,
-    "tx53_readability": TX53_SQL,
-    "gen11_fgm_copula_sample": GEN11_SQL,
-    "mm18_gif_roundtrip": MM18_SQL,
-    "st20_stream_file_sink": ST20_SQL,
-    "ev25_brier_decomposition": EV25_SQL,
-    "mm17_audio_dft": MM17_SQL,
-    "q107_orc_roundtrip": Q107_SQL,
-    "em31_davies_bouldin": EM31_SQL,
-    "q105_label_propagation": Q105_SQL,
-    "q106_adamic_adar": Q106_SQL,
-    "tx51_dsir_resample": TX51_SQL,
-    "tx52_zipf_fit": TX52_SQL,
-    "q103_gini_concentration": Q103_SQL,
-    "q104_theil_sen_trend": Q104_SQL,
-    "ev24_rank_sum_test": EV24_SQL,
-    "mm16_zip_shard_roundtrip": MM16_SQL,
-    "tx50_kneser_ney_lm": TX50_SQL,
-    "em30_rrf_fusion": EM30_SQL,
-    "ev21_roc_auc": EV21_SQL,
-    "ev22_spearman_rho": EV22_SQL,
-    "em28_pca_label_projection": EM28_SQL,
-    "tx49_blocklist_phrases": TX49_SQL,
-    "ev18_permutation_test": EV18_SQL,
-    "mm15_tar_shard_roundtrip": MM15_SQL,
-    "st18_stream_ewma_anomaly": ST18_SQL,
-    "tx48_textrank_keywords": TX48_SQL,
-    "em29_zscore_outliers": EM29_SQL,
-    "ev19_bootstrap_ci": EV19_SQL,
-    "st19_stream_phrase_hits": ST19_SQL,
-    "ev20_memorization_audit": EV20_SQL,
-    "tx45_naive_bayes_lang": TX45_SQL,
-    "tx46_bpe_train": TX46_SQL,
-    "tx47_bpe_encode_stats": TX47_SQL,
-    "st17_stream_classify": ST17_SQL,
-    "ev17_classifier_calibration": EV17_SQL,
-    "em26_graph_search_recall": EM26_SQL,
-    "em27_graph_ingest_recall": EM27_SQL,
-    "em25_nn_descent_recall": EM25_SQL,
-    "q01_surrogate_key": Q01_SQL,
-    "q02_daily_sum": Q02_SQL,
-    "q03_gap_fill": Q03_SQL,
-    "q04_minmax_scale": Q04_SQL,
-    "q05_window_starts": Q05_SQL,
-    "q06_tail_trim": Q06_SQL,
-    "q07_keep_first": Q07_SQL,
-    "q08_metric_summary": Q08_SQL,
-    "q09_lag_mae": Q09_SQL,
-    "q10_weekend_covariate": Q10_SQL,
-    "q11_positional_split": Q11_SQL,
-    "q12_forecast_horizon": Q12_SQL,
-    "q13_count_identity": Q13_SQL,
-    "q14_pricing_summary": Q14_SQL,
-    "q15_nation_revenue": Q15_SQL,
-    "q16_top_parts": Q16_SQL,
-    "q17_json_props": Q17_SQL,
-    "q18_panel_transform": Q18_SQL,
-    "q19_window_sums": Q19_SQL,
-    "q20_upsample_nulls": Q20_SQL,
-    "q21_minmax_roundtrip": Q21_SQL,
-    "q22_forecast_errors": Q22_SQL,
-    "q23_xy_split": Q23_SQL,
-    "q24_best_generator": Q24_SQL,
-    "q25_shipping_priority": Q25_SQL,
-    "q26_order_priority": Q26_SQL,
-    "q27_returned_items": Q27_SQL,
-    "q28_asof_checkpoint": Q28_SQL,
-    "q29_range_hot_days": Q29_SQL,
-    "q50_left_range_cold": Q50_SQL,
-    "q58_salted_revenue": Q58_SQL,
-    "q59_asof_forward_tolerance": Q59_SQL,
-    "q51_small_quantity_revenue": Q51_SQL,
-    "q52_disjunctive_bands": Q52_SQL,
-    "q53_top_supplier": Q53_SQL,
-    "q54_promo_bulk_suppliers": Q54_SQL,
-    "q55_rich_inactive_customers": Q55_SQL,
-    "q30_sessionize": Q30_SQL,
-    "q31_rollup_revenue": Q31_SQL,
-    "q32_quality_quantiles": Q32_SQL,
-    "q33_large_orders": Q33_SQL,
-    "q34_nation_pair_volume": Q34_SQL,
-    "q35_multi_resolution": Q35_SQL,
-    "q36_inactive_dims": Q36_SQL,
-    "q37_pivot_event_types": Q37_SQL,
-    "q38_unpivot_roundtrip": Q38_SQL,
-    "q39_top_events_per_user": Q39_SQL,
-    "q40_above_average_orders": Q40_SQL,
-    "q41_churned_users": Q41_SQL,
-    "q42_cube_type_weekday": Q42_SQL,
-    "q43_mad_by_type": Q43_SQL,
-    "q45_type_correlation": Q45_SQL,
-    "q49_sql_surface": Q49_SQL,
-    "q46_running_totals": Q46_SQL,
-    "q47_revenue_share": Q47_SQL,
-    "q48_value_histogram": Q48_SQL,
-    "q56_ema": Q56_SQL,
-    "q57_order_deciles": Q57_SQL,
-    "q60_trailing_7d": Q60_SQL,
-    "em5_label_centroids": EM5_SQL,
-    "em7_nearest_centroid": EM7_SQL,
-    "tx9_bpe_tokens": TX9_SQL,
-    "tx11_dup_clusters": TX11_SQL,
-    "tx12_simhash_pairs": TX12_SQL,
-    "tx13_top_tokens": TX13_SQL,
-    "tx14_stratified_sample": TX14_SQL,
-    "q44_daily_active_users": Q44_SQL,
-    "em6_label_quality": EM6_SQL,
-    "tx8_rolling_hash": TX8_SQL,
-    "em3_cosine_dedup": EM3_SQL,
-    "em4_ivf_topk": EM4_SQL,
-    "mm1_media_decode": MM1_SQL,
-    "mm2_frame_sample": MM2_SQL,
-    "mm3_audio_chunks": MM3_SQL,
-    "mm4_codec_decode": MM4_SQL,
-    "mm5_png_decode": MM5_SQL,
-    "tx20_corpus_curation": TX20_SQL,
-    "em8_ivf_multiprobe": EM8_SQL,
-    "q61_market_share": Q61_SQL,
-    "q62_custorder_distribution": Q62_SQL,
-    "q63_nation_profit": Q63_SQL,
-    "tx21_lang_mismatch": TX21_SQL,
-    "em9_embed_clusters": EM9_SQL,
-    "em10_ann_recall": EM10_SQL,
-    "mm6_png_resize": MM6_SQL,
-    "st1_stream_daily_sum": ST1_SQL,
-    "st2_stream_window_sums": ST2_SQL,
-    "st3_stream_sessions": ST3_SQL,
-    "st4_stream_minmax": ST4_SQL,
-    "st5_stream_dedup": ST5_SQL,
-    "tx10_quality_prune": TX10_SQL,
-    "tx1_text_stats": TX1_SQL,
-    "tx2_language_id": TX2_SQL,
-    "tx3_exact_dedup": TX3_SQL,
-    "tx4_ngram_jaccard": TX4_SQL,
-    "tx5_minhash_signatures": TX5_SQL,
-    "tx6_minhash_lsh_pairs": TX6_SQL,
-    "tx7_simhash": TX7_SQL,
-    "em1_cosine_topk": EM1_SQL,
-    "tx15_clean_text": TX15_SQL,
-    "tx16_pii_redaction": TX16_SQL,
-    "tx17_top_bigrams": TX17_SQL,
-    "tx18_repetition_ratio": TX18_SQL,
-    "tx19_normalized_dedup": TX19_SQL,
-    "tx22_contamination": TX22_SQL,
-    "tx23_duplicate_spans": TX23_SQL,
-    "tx24_zipf_slope": TX24_SQL,
-    "q64_event_percentiles": Q64_SQL,
-    "q65_cold_customers": Q65_SQL,
-    "em11_quantization_error": EM11_SQL,
-    "st6_stream_daily_users": ST6_SQL,
-    "q66_type_transitions": Q66_SQL,
-    "q67_kmv_distinct": Q67_SQL,
-    "tx25_unigram_logprob": TX25_SQL,
-    "gen5_markov_sample": GEN5_SQL,
-    "gen2_gaussian_sample": GEN2_SQL,
-    "gen1_bootstrap_sample": GEN1_SQL,
-    "gen3_generation_rounds": GEN3_SQL,
-    "gen4_conditional_sample": GEN4_SQL,
-    "ev5_forecast_backtest": EV5_SQL,
-    "ev1_pipeline_summary": EV1_SQL,
-    "mm10_mp4_sample_table": MM10_SQL,
-    "q81_triangle_brands": Q81_SQL,
-    "q82_cohort_retention": Q82_SQL,
-    "em16_pq_adc_recall": EM16_SQL,
-    "em17_ivfpq_recall": EM17_SQL,
-    "tx39_semdedup_keep": TX39_SQL,
-    "q83_dominant_part_suppliers": Q83_SQL,
-    "em18_hamming_rerank": EM18_SQL,
-    "q84_min_cost_supplier": Q84_SQL,
-    "tx40_minhash_error": TX40_SQL,
-    "q85_trade_reach": Q85_SQL,
-    "q86_incremental_view_merge": Q86_SQL,
-    "q87_important_parts": Q87_SQL,
-    "q88_part_supplier_counts": Q88_SQL,
-    "em19_mmr_rerank": EM19_SQL,
-    "em20_ivf_ingest": EM20_SQL,
-    "tx41_line_dedup": TX41_SQL,
-    "ev10_acf_fidelity": EV10_SQL,
-    "q89_trade_kcore": Q89_SQL,
-    "q90_priority_shipments": Q90_SQL,
-    "q91_promo_revenue_share": Q91_SQL,
-    "ev11_ewma_backtest": EV11_SQL,
-    "st13_stream_left_join": ST13_SQL,
-    "mm12_exif_tags": MM12_SQL,
-    # st12 is q82's streaming dual: the batch SQL is its oracle.
-    "st12_stream_cohort": Q82_SQL,
-    "ev9_energy_fidelity": EV9_SQL,
-    "mm11_mjpeg_decode": MM11_SQL,
-    "q76_large_volume_orders": Q76_SQL,
-    "q77_small_qty_revenue": Q77_SQL,
-    "q78_dormant_rich_customers": Q78_SQL,
-    "q79_quantile_sketch": Q79_SQL,
-    "tx38_fuzzy_supplier_match": TX38_SQL,
-    "tx42_duplicate_substrings": TX42_SQL,
-    "tx43_exactsubstr_strip": TX43_SQL,
-    "mm13_audio_metadata": MM13_SQL,
-    "st14_stream_view_rollup": ST14_SQL,
-    "q92_customer_distribution": Q92_SQL,
-    "q93_trade_assortativity": Q93_SQL,
-    "ev12_chi2_drift": EV12_SQL,
-    "tx44_token_pair_lift": TX44_SQL,
-    "em21_covariance_matrix": EM21_SQL,
-    "mm14_subtitle_cues": MM14_SQL,
-    "q94_dormant_rich_by_nation": Q94_SQL,
-    "q95_top_supplier": Q95_SQL,
-    "gen7_quantile_remap": GEN7_SQL,
-    "ev13_theil_u": EV13_SQL,
-    "q96_mad_robust_stats": Q96_SQL,
-    "em22_power_iteration": EM22_SQL,
-    "st15_stream_latest": ST15_SQL,
-    "q97_jsonl_roundtrip": Q97_SQL,
-    "q98_waiting_suppliers": Q98_SQL,
-    "em23_variance_explained": EM23_SQL,
-    "q99_market_share": Q99_SQL,
-    "gen8_smoothed_bootstrap": GEN8_SQL,
-    "ev14_interval_coverage": EV14_SQL,
-    "q100_disjunctive_predicates": Q100_SQL,
-    "em24_loo_knn_accuracy": EM24_SQL,
-    "ev15_synth_ks": EV15_SQL,
-    "q101_percent_ranks": Q101_SQL,
-    "st16_stream_leaderboard": ST16_SQL,
-    "q102_forecast_revenue_change": Q102_SQL,
-    "ev16_generator_rank": EV16_SQL,
-    "gen9_text_markov": GEN9_SQL,
-    "st11_stream_quantile_sketch": ST11_SQL,
-    "q80_bloom_prune": Q80_SQL,
-    "q73_hll_distinct": Q73_SQL,
-    "tx33_count_min_tokens": TX33_SQL,
-    "tx34_perplexity_buckets": TX34_SQL,
-    "tx35_weighted_sample": TX35_SQL,
-    "st9_stream_hll_distinct": ST9_SQL,
-    "q74_blame_suppliers": Q74_SQL,
-    "em14_kmeans_clusters": EM14_SQL,
-    "em15_retrieval_topk": EM15_SQL,
-    "ev8_coverage_metric": EV8_SQL,
-    "tx36_ingest_novelty": TX36_SQL,
-    "tx37_quality_dedup_keep": TX37_SQL,
-    "ev6_ks_fidelity": EV6_SQL,
-    "st10_stream_count_min": ST10_SQL,
-    "q75_grouping_sets": Q75_SQL,
-    "ev2_univariate_summary": EV2_SQL,
-    "ev3_drift_summary": EV3_SQL,
-    "em2_lsh_topk": EM2_SQL,
-    "ev4_markov_fidelity": EV4_SQL,
-    "mm7_media_probe": MM7_SQL,
-    "tx26_containment_pairs": TX26_SQL,
-    "tx27_mixture_sample": TX27_SQL,
-    "tx28_sequence_pack": TX28_SQL,
-    "tx29_chunk_overlap": TX29_SQL,
-    "tx30_tfidf_terms": TX30_SQL,
-    "tx31_bm25_search": TX31_SQL,
-    "em12_random_projection": EM12_SQL,
-    "st7_stream_enrich": ST7_SQL,
-    "tx32_gopher_gate": TX32_SQL,
-    "mm8_jpeg_decode": MM8_SQL,
-    "mm9_wav_stats": MM9_SQL,
-    "st8_stream_interval_join": ST8_SQL,
-    "q69_trade_pagerank": Q69_SQL,
-    "em13_truncation_recall": EM13_SQL,
-    "q70_scd2_intervals": Q70_SQL,
-    "q71_cdc_merge": Q71_SQL,
-    "q72_split_manifest": Q72_SQL,
-    "q68_conversion_funnel": Q68_SQL,
+    name: globals()[f"{name.split('_', 1)[0].upper()}_SQL"]
+    for name in QUERIES
+    if name not in ROWS_ONLY
 }

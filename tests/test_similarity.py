@@ -870,6 +870,20 @@ def test_covariance_matrix_exact_values(spark):
     assert all(math.copysign(1.0, v) > 0 for v in got.values() if v == 0.0)
 
 
+def test_covariance_matrix_ignores_over_length_tail(spark):
+    """Ragged input whose later row is LONGER than the first row's
+    width: the elements past the width are ignored (the slice length
+    clamps at zero instead of going negative and failing the job)."""
+    from paqarin_spark.operators import covariance_matrix
+
+    df = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [1.0, 2.0]), (2, [2.0, 4.0, 99.0, -7.0])],
+        "id int, v array<double>",
+    )
+    got = {(r["i"], r["j"]): r["cov"] for r in covariance_matrix(df, "v").collect()}
+    assert got == {(0, 0): 0.666667, (0, 1): 1.333333, (1, 1): 2.666667}
+
+
 def test_power_iteration_finds_planted_direction(spark):
     """A corpus with one dominant variance direction: the iterate
     aligns with numpy's leading eigenvector (|cos| ~ 1) and the

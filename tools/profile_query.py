@@ -95,6 +95,7 @@ def main() -> int:
             f" jobs={njobs} stages={nstages} rows={n}"
         )
         spark.sparkContext.setJobDescription(None)
+        spark.sparkContext._jsc.clearJobGroup()
     return 0
 
 
