@@ -492,7 +492,7 @@ def _duplicate_clusters_contract(
     every node is the smallest id in its component — the same
     contract as ``label``/``star`` and the recursive-CTE oracles.
     """
-    canon = (
+    edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .where(F.col("src") != F.col("dst"))
         .distinct()
@@ -505,7 +505,6 @@ def _duplicate_clusters_contract(
         .withColumn("rep", F.col("node"))
         .localCheckpoint()
     )
-    edges = canon
     for _ in range(max_rounds):
         if edges.isEmpty():
             break
@@ -525,7 +524,6 @@ def _duplicate_clusters_contract(
             )
             .localCheckpoint()
         )
-        mapping.unpersist()
         mapping = new_mapping
         a = lbl.select(F.col("src"), F.col("lbl").alias("_sa"))
         b = lbl.select(F.col("src").alias("dst"), F.col("lbl").alias("_sb"))
@@ -540,15 +538,11 @@ def _duplicate_clusters_contract(
             .distinct()
             .localCheckpoint()
         )
-        if edges is not canon:
-            edges.unpersist()
         edges = new_edges
     if not edges.isEmpty():
         # Adversarial residual (monotone chains): finish with the
         # shape-independent O(log²) star algorithm on the contracted
-        # graph and compose the mappings. The residual's checkpointed
-        # edges stay persisted — the composed plan reads them and a
-        # checkpoint's blocks are not recomputable once dropped.
+        # graph and compose the mappings.
         residual = edges.select(
             F.col("src").alias("id_a"), F.col("dst").alias("id_b")
         )
@@ -567,16 +561,9 @@ def _duplicate_clusters_contract(
             )
             .localCheckpoint()
         )
-    out = mapping.select(
+    return mapping.select(
         F.col("node").alias("doc"), F.col("rep").alias("cluster_rep")
     )
-    # The final mapping is checkpointed, so the intermediate edge sets
-    # can drop now (the empty final frame in the converged case, the
-    # residual after the composed mapping materialized otherwise).
-    if edges is not canon:
-        edges.unpersist()
-    canon.unpersist()
-    return out
 
 
 def _duplicate_clusters_star(

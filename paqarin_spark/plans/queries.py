@@ -7527,16 +7527,26 @@ def _run_to_memory(
     that table. ``partitions`` caps the stateful exchange for the
     ``start()``/``awaitTermination`` window only: a declared key-domain
     bound for bounded-key state, or
-    :func:`_stream_state_partition_count` for unbounded keys."""
-    with _bounded_state_partitions(spark, partitions):
-        (
-            frame.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+    :func:`_stream_state_partition_count` for unbounded keys. The
+    checkpoint lives in a fresh dir under ``tempfile.gettempdir()``,
+    removed when the run ends."""
+    import shutil
+    import tempfile
+
+    ckpt = tempfile.mkdtemp(prefix=f"{name}-ckpt-")
+    try:
+        with _bounded_state_partitions(spark, partitions):
+            (
+                frame.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
 

@@ -15,11 +15,30 @@ operators so the same engine serves continuous ingestion at scale:
 All are *transformations* on an unbounded DataFrame: callers plug any
 ``readStream`` source in and any ``writeStream`` sink out; tests drive
 them with a file source + memory sink under ``Trigger.AvailableNow``.
+
+Versioned corrections. The custom stateful operators —
+:func:`stream_quantile_sketch`, :func:`stream_cohort_offsets`,
+:func:`stream_view_rollup`, :func:`stream_latest_per_key`,
+:func:`stream_group_topk`, :func:`stream_classify_counts`,
+:func:`stream_ewma_anomaly`, :func:`stream_phrase_hits`,
+:func:`stream_key_counts` and :func:`stream_bin_counts` — keep one
+state row per key (``applyInPandasWithState``, append mode, no
+timeout) and emit ``(*key, version, *row)``. ``version`` counts a
+key's publications: 1, 2, ... with no gaps. An operator publishes for
+a key in a micro-batch only when the key's answer may have changed
+(the counters and the view/EWMA folds on every batch that touches
+the key, the others only when their answer changes), and each
+publication carries the key's FULL corrected answer, never a delta.
+So the max-version rows per key are the answer over everything seen,
+whatever the micro-batch boundaries: finish an accumulated emission
+table with :func:`latest_sketch_version` (the ``*_from_emissions``
+finishers do, then format). :func:`stream_sliding_windows` is
+stateful too but emits each window once, under a ``sequence_id``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from paqarin_spark.schema import TimeSeriesSchema, freq_to_spark
@@ -40,6 +59,63 @@ def _window_duration(frequency: str) -> str:
             f"frequency {frequency!r} has no fixed-length streaming window"
         )
     return _UNIT_TO_WINDOW[unit]
+
+
+def _versioned_state(
+    staged: DataFrame,
+    keys: list[str],
+    payload_schema: str,
+    state_schema: str,
+    step,
+) -> DataFrame:
+    """The versioned-correction operator (module docstring): group
+    ``staged`` by ``keys`` and, per key and micro-batch, call
+    ``step(key, pdf_iter, prior) -> (state, rows)``. ``prior`` is the
+    stored state — a list of ``state_schema``'s fields — or None for
+    a new key. A None ``state`` keeps the stored one; None ``rows``
+    publish nothing. Publishing bumps the key's version (kept as the
+    last state field) and emits ``(*key, version, *row)`` per row:
+    key columns typed as staged (nullable), ``version bigint NOT
+    NULL``, then ``payload_schema``'s fields."""
+    import pandas as pd
+
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    out_type = StructType(
+        [StructField(k, staged.schema[k].dataType, True) for k in keys]
+        + [StructField("version", LongType(), False)]
+        + StructType.fromDDL(payload_schema).fields
+    )
+    columns = out_type.names
+
+    def fold(key, pdf_iter, state: GroupState):
+        prior, version = None, 0
+        if state.exists:
+            *prior, version = state.get
+        new, rows = step(key, pdf_iter, prior)
+        if rows is not None:
+            version += 1
+        if new is not None or rows is not None:
+            state.update((*(prior if new is None else new), version))
+        if rows is not None:
+            yield pd.DataFrame(
+                [(*key, version, *row) for row in rows], columns=columns
+            )
+
+    return staged.groupBy(*keys).applyInPandasWithState(
+        fold,
+        outputStructType=out_type,
+        stateStructType=f"{state_schema}, version bigint",
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _count_step(key, pdf_iter, prior):
+    """Running row count per key, published on every batch."""
+    n = (prior[0] if prior else 0) + sum(len(pdf) for pdf in pdf_iter)
+    return (n,), [(n,)]
 
 
 def stream_time_bucket_sum(
@@ -195,18 +271,6 @@ def stream_quantile_sketch(
     micro-batch boundaries, the final state does not). Ties on the
     53-bit md5 double break on the STRING concat of ``rank_columns``
     (document for oracle replays: ORDER BY key, CAST(id AS VARCHAR))."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from paqarin_spark.functions import uniform_hash
 
     groups = list(group_by or [])
@@ -222,32 +286,9 @@ def stream_quantile_sketch(
         F.concat_ws("#", *ident).alias("_tie"),
         F.col(value_column).cast("double").alias("_v"),
     )
-    group_fields = [
-        StructField(g, staged.schema[g].dataType, True) for g in groups
-    ]
-    out_type = StructType(
-        [
-            *group_fields,
-            StructField("version", LongType(), False),
-            StructField("_rk", LongType(), False),
-            StructField("value", DoubleType(), True),
-        ]
-    )
-    state_type = StructType(
-        [
-            StructField("keys", ArrayType(DoubleType()), True),
-            StructField("ties", ArrayType(StringType()), True),
-            StructField("vals", ArrayType(DoubleType()), True),
-            StructField("version", LongType(), True),
-        ]
-    )
 
-    def fold(key, pdf_iter, state: GroupState):
-        if state.exists:
-            keys, ties, vals, version = state.get
-            entries = list(zip(keys, ties, vals))
-        else:
-            entries, version = [], 0
+    def step(key, pdf_iter, prior):
+        entries = list(zip(*prior)) if prior else []
         before = sorted(entries)[:k]
         for pdf in pdf_iter:
             entries.extend(
@@ -258,37 +299,28 @@ def stream_quantile_sketch(
                 )
             )
         entries = sorted(entries)[:k]
-        if entries != before:
-            version += 1
-            state.update(
-                (
-                    [e[0] for e in entries],
-                    [e[1] for e in entries],
-                    [e[2] for e in entries],
-                    version,
-                )
-            )
-            yield pd.DataFrame(
-                [
-                    (*key, version, rk + 1, e[2])
-                    for rk, e in enumerate(entries)
-                ],
-                columns=[*groups, "version", "_rk", "value"],
-            )
+        if entries == before:
+            return None, None
+        return (
+            ([e[0] for e in entries], [e[1] for e in entries],
+             [e[2] for e in entries]),
+            [(rk + 1, e[2]) for rk, e in enumerate(entries)],
+        )
 
-    return staged.groupBy(*groups).applyInPandasWithState(
-        fold,
-        outputStructType=out_type,
-        stateStructType=state_type,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _versioned_state(
+        staged,
+        groups,
+        "_rk bigint NOT NULL, value double",
+        "keys array<double>, ties array<string>, vals array<double>",
+        step,
     )
 
 
 def latest_sketch_version(table: DataFrame, group_by: list[str]) -> DataFrame:
-    """Select each group's max-``version`` emission from an
-    accumulated :func:`stream_quantile_sketch` sink table — the final
-    state, independent of how many micro-batches the stream saw."""
+    """Finish any versioned emission table (module docstring): keep
+    each ``group_by`` key's max-``version`` rows and drop ``version``
+    — the final answer, independent of how many micro-batches the
+    stream saw. Every ``*_from_emissions`` finisher starts here."""
     from pyspark.sql import Window
 
     w = Window.partitionBy(*group_by)
@@ -639,33 +671,11 @@ def stream_cohort_offsets(
     when it actually changes."""
     import pandas as pd
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     staged = stream.select(
-        F.col(user_column).alias("user_id"),
+        F.col(user_column).cast("long").alias("user_id"),
         F.datediff(
             F.to_date(ts_column), F.lit("1970-01-01").cast("date")
         ).cast("long").alias("_day"),
-    )
-    out_type = StructType(
-        [
-            StructField("user_id", LongType(), True),
-            StructField("version", LongType(), False),
-            StructField("cohort_epoch_day", LongType(), False),
-            StructField("week_offset", LongType(), False),
-        ]
-    )
-    state_type = StructType(
-        [
-            StructField("days", ArrayType(LongType()), True),
-            StructField("version", LongType(), True),
-        ]
     )
 
     def derived(days: set) -> tuple:
@@ -674,32 +684,27 @@ def stream_cohort_offsets(
         first = min(days)
         return (first, tuple(sorted({(d - first) // 7 for d in days})))
 
-    def fold(key, pdf_iter, state: GroupState):
-        if state.exists:
-            stored, version = state.get
-            days = set(stored)
-        else:
-            days, version = set(), 0
-        before = derived(days)
+    def step(key, pdf_iter, prior):
+        days = set(prior[0]) if prior else set()
+        n_before, before = len(days), derived(days)
         for pdf in pdf_iter:
             days.update(int(d) for d in pdf["_day"] if not pd.isna(d))
+        if len(days) == n_before:
+            return None, None
+        # every new day is stored (an earlier first day arriving later
+        # rebases all offsets); only a changed (cohort, offsets) set
+        # publishes
         after = derived(days)
-        if after != before:
-            version += 1
-            state.update((sorted(days), version))
-            first, offsets = after
-            yield pd.DataFrame(
-                [(key[0], version, first, off) for off in offsets],
-                columns=["user_id", "version", "cohort_epoch_day",
-                         "week_offset"],
-            )
+        first, offsets = after
+        rows = None if after == before else [(first, o) for o in offsets]
+        return (sorted(days),), rows
 
-    return staged.groupBy("user_id").applyInPandasWithState(
-        fold,
-        outputStructType=out_type,
-        stateStructType=state_type,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _versioned_state(
+        staged,
+        ["user_id"],
+        "cohort_epoch_day bigint NOT NULL, week_offset bigint NOT NULL",
+        "days array<bigint>",
+        step,
     )
 
 
@@ -709,11 +714,7 @@ def cohort_retention_from_emissions(emissions: DataFrame) -> DataFrame:
     corrected set), then the same (cohort, offset) rollup / offset-0
     size join / 6dp retention arithmetic as the batch query — so a
     streaming run hash-matches the batch SQL oracle."""
-    w = Window.partitionBy("user_id")
-    latest = (
-        emissions.withColumn("_mx", F.max("version").over(w))
-        .where(F.col("version") == F.col("_mx"))
-    )
+    latest = latest_sketch_version(emissions, ["user_id"])
     epoch = F.lit("1970-01-01").cast("date")
     g = (
         latest.select(
@@ -774,46 +775,17 @@ def stream_view_rollup(
     O(users) forever, never O(events)."""
     import pandas as pd
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     staged = stream.select(
-        F.col(user_column).alias("user_id"),
+        F.col(user_column).cast("long").alias("user_id"),
         F.unix_micros(F.col(ts_column)).alias("_ts_us"),
         F.col(value_column).alias("_v"),
     )
-    out_type = StructType(
-        [
-            StructField("user_id", LongType(), True),
-            StructField("version", LongType(), False),
-            StructField("n_events", LongType(), False),
-            StructField("sum_dec", StringType(), True),
-            StructField("last_ts_us", LongType(), True),
-        ]
-    )
-    state_type = StructType(
-        [
-            StructField("n", LongType(), True),
-            StructField("n_vals", LongType(), True),
-            StructField("sum_scaled", StringType(), True),
-            StructField("last_ts", LongType(), True),
-            StructField("version", LongType(), True),
-        ]
-    )
 
-    def fold(key, pdf_iter, state: GroupState):
+    def step(key, pdf_iter, prior):
         from decimal import ROUND_HALF_UP, Decimal
 
-        if state.exists:
-            n, n_vals, s_str, last, version = state.get
-            s = int(s_str)
-        else:
-            n, n_vals, s, last, version = 0, 0, 0, None, 0
+        n, n_vals, s_str, last = prior or (0, 0, "0", None)
+        s = int(s_str)
         for pdf in pdf_iter:
             n += len(pdf)
             for v in pdf["_v"]:
@@ -828,23 +800,17 @@ def stream_view_rollup(
                 if not pd.isna(t):
                     t = int(t)
                     last = t if last is None or t > last else last
-        version += 1
-        state.update((n, n_vals, str(s), last, version))
         # SUM over zero non-NULL inputs is NULL in SQL, not 0 — emit
         # None so the finished view hash-matches the batch GROUP BY
         dec = format(Decimal(s).scaleb(-10), "f") if n_vals else None
-        yield pd.DataFrame(
-            [(key[0], version, n, dec, last)],
-            columns=["user_id", "version", "n_events", "sum_dec",
-                     "last_ts_us"],
-        )
+        return (n, n_vals, str(s), last), [(n, dec, last)]
 
-    return staged.groupBy("user_id").applyInPandasWithState(
-        fold,
-        outputStructType=out_type,
-        stateStructType=state_type,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _versioned_state(
+        staged,
+        ["user_id"],
+        "n_events bigint NOT NULL, sum_dec string, last_ts_us bigint",
+        "n bigint, n_vals bigint, sum_scaled string, last_ts bigint",
+        step,
     )
 
 
@@ -854,11 +820,7 @@ def view_from_emissions(emissions: DataFrame) -> DataFrame:
     back through decimal(30,10) and the same 6dp display rounding /
     timestamp formatting as the batch full recompute — so a streaming
     run hash-matches the plain GROUP BY oracle."""
-    w = Window.partitionBy("user_id")
-    latest = (
-        emissions.withColumn("_mx", F.max("version").over(w))
-        .where(F.col("version") == F.col("_mx"))
-    )
+    latest = latest_sketch_version(emissions, ["user_id"])
     return latest.select(
         "user_id",
         "n_events",
@@ -894,43 +856,15 @@ def stream_latest_per_key(
     State bound: ONE row per key, forever."""
     import pandas as pd
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     staged = stream.select(
-        F.col(key_column).alias("k"),
+        F.col(key_column).cast("long").alias("k"),
         F.unix_micros(F.col(ts_column)).alias("_ts_us"),
         F.col(id_column).alias("_id"),
         F.col(value_column).alias("_v"),
     )
-    out_type = StructType(
-        [
-            StructField("k", LongType(), True),
-            StructField("version", LongType(), False),
-            StructField("last_ts_us", LongType(), True),
-            StructField("last_id", LongType(), True),
-            StructField("last_value", DoubleType(), True),
-        ]
-    )
-    state_type = StructType(
-        [
-            StructField("ts", LongType(), True),
-            StructField("id", LongType(), True),
-            StructField("v", DoubleType(), True),
-            StructField("version", LongType(), True),
-        ]
-    )
 
-    def fold(key, pdf_iter, state: GroupState):
-        if state.exists:
-            ts, rid, v, version = state.get
-        else:
-            ts, rid, v, version = None, None, None, 0
+    def step(key, pdf_iter, prior):
+        ts, rid, v = prior or (None, None, None)
         best = (ts, rid) if ts is not None else None
         for pdf in pdf_iter:
             for t, i, val in zip(pdf["_ts_us"], pdf["_id"], pdf["_v"]):
@@ -940,22 +874,16 @@ def stream_latest_per_key(
                 if best is None or cand > best:
                     best = cand
                     v = None if pd.isna(val) else float(val)
-        if best is not None and (ts, rid) != best:
-            ts, rid = best
-            version += 1
-            state.update((ts, rid, v, version))
-            yield pd.DataFrame(
-                [(key[0], version, ts, rid, v)],
-                columns=["k", "version", "last_ts_us", "last_id",
-                         "last_value"],
-            )
+        if best is None or (ts, rid) == best:
+            return None, None
+        return (*best, v), [(*best, v)]
 
-    return staged.groupBy("k").applyInPandasWithState(
-        fold,
-        outputStructType=out_type,
-        stateStructType=state_type,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _versioned_state(
+        staged,
+        ["k"],
+        "last_ts_us bigint, last_id bigint, last_value double",
+        "ts bigint, id bigint, v double",
+        step,
     )
 
 
@@ -963,11 +891,7 @@ def latest_from_emissions(emissions: DataFrame) -> DataFrame:
     """Finish a :func:`stream_latest_per_key` emission table: the
     max-version row per key IS the cache — formatted with the batch
     query's column contract (ts string, id, value)."""
-    w = Window.partitionBy("k")
-    latest = (
-        emissions.withColumn("_mx", F.max("version").over(w))
-        .where(F.col("version") == F.col("_mx"))
-    )
+    latest = latest_sketch_version(emissions, ["k"])
     return latest.select(
         F.col("k"),
         F.date_format(
@@ -999,16 +923,6 @@ def stream_group_topk(
     State bound: k rows per group, forever."""
     import pandas as pd
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     if k < 1:
         raise ValueError("k must be >= 1")
     id_type = stream.schema[id_column].dataType.simpleString()
@@ -1022,29 +936,9 @@ def stream_group_topk(
         F.col(value_column).cast("double").alias("_v"),
         F.col(id_column).cast("long").alias("_id"),
     )
-    out_type = StructType(
-        [
-            StructField("g", StringType(), True),
-            StructField("version", LongType(), False),
-            StructField("rank", LongType(), False),
-            StructField("id", LongType(), False),
-            StructField("value", DoubleType(), True),
-        ]
-    )
-    state_type = StructType(
-        [
-            StructField("vals", ArrayType(DoubleType()), True),
-            StructField("ids", ArrayType(LongType()), True),
-            StructField("version", LongType(), True),
-        ]
-    )
 
-    def fold(key, pdf_iter, state: GroupState):
-        if state.exists:
-            vals, ids, version = state.get
-            board = list(zip(vals, ids))
-        else:
-            board, version = [], 0
+    def step(key, pdf_iter, prior):
+        board = list(zip(*prior)) if prior else []
         before = list(board)
         for pdf in pdf_iter:
             for v, i in zip(pdf["_v"], pdf["_id"]):
@@ -1054,36 +948,27 @@ def stream_group_topk(
                     continue
                 board.append((float(v), int(i)))
         board = sorted(board, key=lambda t: (-t[0], t[1]))[:k]
-        if board != before:
-            version += 1
-            state.update(
-                ([v for v, _ in board], [i for _, i in board], version)
-            )
-            yield pd.DataFrame(
-                [
-                    (key[0], version, r + 1, i, v)
-                    for r, (v, i) in enumerate(board)
-                ],
-                columns=["g", "version", "rank", "id", "value"],
-            )
+        if board == before:
+            return None, None
+        return (
+            ([v for v, _ in board], [i for _, i in board]),
+            [(r + 1, i, v) for r, (v, i) in enumerate(board)],
+        )
 
-    return staged.groupBy("g").applyInPandasWithState(
-        fold,
-        outputStructType=out_type,
-        stateStructType=state_type,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _versioned_state(
+        staged,
+        ["g"],
+        "rank bigint NOT NULL, id bigint NOT NULL, value double",
+        "vals array<double>, ids array<bigint>",
+        step,
     )
 
 
 def leaderboard_from_emissions(emissions: DataFrame) -> DataFrame:
     """Finish a :func:`stream_group_topk` emission table: max-version
     rows per group ARE the leaderboard."""
-    w = Window.partitionBy("g")
-    return (
-        emissions.withColumn("_mx", F.max("version").over(w))
-        .where(F.col("version") == F.col("_mx"))
-        .select("g", "rank", "id", "value")
+    return latest_sketch_version(emissions, ["g"]).select(
+        "g", "rank", "id", "value"
     )
 
 
@@ -1117,9 +1002,6 @@ def stream_classify_counts(
 
     import pandas as pd
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     labels = list(scoring["labels"])
     prior = dict(scoring["prior"])
     terms = {t: dict(cs) for t, cs in scoring["terms"].items()}
@@ -1145,51 +1027,16 @@ def stream_classify_counts(
     scored = stream.select(text_column).mapInPandas(
         classify, schema="label string"
     )
-
-    out_type = StructType(
-        [
-            StructField("label", StringType(), True),
-            StructField("version", LongType(), False),
-            StructField("n_docs", LongType(), False),
-        ]
-    )
-    state_type = StructType(
-        [
-            StructField("n", LongType(), True),
-            StructField("version", LongType(), True),
-        ]
-    )
-
-    def fold(key, pdf_iter, state: GroupState):
-        if state.exists:
-            n, version = state.get
-        else:
-            n, version = 0, 0
-        for pdf in pdf_iter:
-            n += len(pdf)
-        version += 1
-        state.update((n, version))
-        yield pd.DataFrame(
-            [(key[0], version, n)], columns=["label", "version", "n_docs"]
-        )
-
-    return scored.groupBy("label").applyInPandasWithState(
-        fold,
-        outputStructType=out_type,
-        stateStructType=state_type,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _versioned_state(
+        scored, ["label"], "n_docs bigint NOT NULL", "n bigint", _count_step
     )
 
 
 def class_counts_from_emissions(emissions: DataFrame) -> DataFrame:
     """Finish :func:`stream_classify_counts` emissions: max-version
     row per class is the current count table."""
-    w = Window.partitionBy("label")
-    return (
-        emissions.withColumn("_mx", F.max("version").over(w))
-        .where(F.col("version") == F.col("_mx"))
-        .select("label", "n_docs")
+    return latest_sketch_version(emissions, ["label"]).select(
+        "label", "n_docs"
     )
 
 
@@ -1236,20 +1083,11 @@ def stream_ewma_anomaly(
     """
     import pandas as pd
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     if warmup < 0:
         raise ValueError("warmup must be >= 0")
     staged = stream.select(
-        # cast to the emission schema's LongType up front — a string
-        # or int key would otherwise contradict out_type at Arrow
-        # conversion inside the fold
+        # the staged key type is the emission key type: cast to long
+        # up front, whatever the source column's type
         F.col(user_column).try_cast("long").alias("user_id"),
         F.unix_micros(F.col(ts_column)).alias("_ts_us"),
         F.col(id_column).cast("long").alias("_eid"),
@@ -1263,36 +1101,12 @@ def stream_ewma_anomaly(
         # fold (mirrors the NULL-key drop in paired_permutation_test)
         F.col("user_id").isNotNull()
     )
-    out_type = StructType(
-        [
-            StructField("user_id", LongType(), True),
-            StructField("version", LongType(), False),
-            StructField("n_events", LongType(), False),
-            StructField("n_anomalies", LongType(), False),
-            StructField("n_late", LongType(), False),
-            StructField("ewma_repr", StringType(), True),
-        ]
-    )
-    state_type = StructType(
-        [
-            StructField("last_ts", LongType(), True),
-            StructField("last_eid", LongType(), True),
-            StructField("s_repr", StringType(), True),
-            StructField("n", LongType(), True),
-            StructField("n_anom", LongType(), True),
-            StructField("n_late", LongType(), True),
-            StructField("version", LongType(), True),
-        ]
-    )
 
-    def fold(key, pdf_iter, state: GroupState):
-        if state.exists:
-            last_ts, last_eid, s_repr, n, n_anom, n_late, version = state.get
-            s = None if s_repr is None else float(s_repr)
-        else:
-            last_ts, last_eid, s, n, n_anom, n_late, version = (
-                None, None, None, 0, 0, 0, 0,
-            )
+    def step(key, pdf_iter, prior):
+        last_ts, last_eid, s, n, n_anom, n_late = (
+            prior or (None, None, None, 0, 0, 0)
+        )
+        s = None if s is None else float(s)
         chunks = [pdf for pdf in pdf_iter if len(pdf)]
         if chunks:
             pdf = pd.concat(chunks, ignore_index=True).sort_values(
@@ -1311,24 +1125,20 @@ def stream_ewma_anomaly(
                     s = 0.75 * s + 0.25 * x
                 n += 1
                 last_ts, last_eid = t, e
-        version += 1
-        state.update(
-            (last_ts, last_eid,
-             None if s is None else repr(s), n, n_anom, n_late, version)
-        )
-        yield pd.DataFrame(
-            [(key[0], version, n, n_anom, n_late,
-              None if s is None else repr(s))],
-            columns=["user_id", "version", "n_events", "n_anomalies",
-                     "n_late", "ewma_repr"],
+        s_repr = None if s is None else repr(s)
+        return (
+            (last_ts, last_eid, s_repr, n, n_anom, n_late),
+            [(n, n_anom, n_late, s_repr)],
         )
 
-    return staged.groupBy("user_id").applyInPandasWithState(
-        fold,
-        outputStructType=out_type,
-        stateStructType=state_type,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _versioned_state(
+        staged,
+        ["user_id"],
+        "n_events bigint NOT NULL, n_anomalies bigint NOT NULL, "
+        "n_late bigint NOT NULL, ewma_repr string",
+        "last_ts bigint, last_eid bigint, s_repr string, n bigint, "
+        "n_anom bigint, n_late bigint",
+        step,
     )
 
 
@@ -1336,17 +1146,12 @@ def ewma_from_emissions(emissions: DataFrame) -> DataFrame:
     """Finish :func:`stream_ewma_anomaly` emissions: max-version row
     per key, the repr-string EWMA cast back to its identical double,
     6dp display rounding."""
-    w = Window.partitionBy("user_id")
-    return (
-        emissions.withColumn("_mx", F.max("version").over(w))
-        .where(F.col("version") == F.col("_mx"))
-        .select(
-            "user_id",
-            "n_events",
-            "n_anomalies",
-            "n_late",
-            F.round(F.col("ewma_repr").cast("double"), 6).alias("ewma"),
-        )
+    return latest_sketch_version(emissions, ["user_id"]).select(
+        "user_id",
+        "n_events",
+        "n_anomalies",
+        "n_late",
+        F.round(F.col("ewma_repr").cast("double"), 6).alias("ewma"),
     )
 
 
@@ -1370,16 +1175,6 @@ def stream_phrase_hits(
     the stream deliberately does not, stated not hidden).
 
     State bound: |blocklist| rows of (count, version), forever."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from paqarin_spark.operators.corpus import (
         normalize_blocklist,
         word_ngrams,
@@ -1395,40 +1190,9 @@ def stream_phrase_hits(
     grams = toks.select(
         F.explode(word_ngrams(F.col("_ts"), n)).alias("phrase")
     ).where(F.col("phrase").isin(*blk))
-    out_type = StructType(
-        [
-            StructField("phrase", StringType(), True),
-            StructField("version", LongType(), False),
-            StructField("n_hits", LongType(), False),
-        ]
-    )
-    state_type = StructType(
-        [
-            StructField("n_hits", LongType(), True),
-            StructField("version", LongType(), True),
-        ]
-    )
-
-    def fold(key, pdf_iter, state: GroupState):
-        if state.exists:
-            n_hits, version = state.get
-        else:
-            n_hits, version = 0, 0
-        for pdf in pdf_iter:
-            n_hits += len(pdf)
-        version += 1
-        state.update((n_hits, version))
-        yield pd.DataFrame(
-            [(key[0], version, n_hits)],
-            columns=["phrase", "version", "n_hits"],
-        )
-
-    return grams.groupBy("phrase").applyInPandasWithState(
-        fold,
-        outputStructType=out_type,
-        stateStructType=state_type,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _versioned_state(
+        grams, ["phrase"], "n_hits bigint NOT NULL", "n_hits bigint",
+        _count_step,
     )
 
 
@@ -1445,11 +1209,8 @@ def phrase_hits_from_emissions(
     blk = spark.createDataFrame(
         [(p,) for p in normalize_blocklist(phrases, n)], ["phrase"]
     )
-    w = Window.partitionBy("phrase")
-    latest = (
-        emissions.withColumn("_mx", F.max("version").over(w))
-        .where(F.col("version") == F.col("_mx"))
-        .select("phrase", "n_hits")
+    latest = latest_sketch_version(emissions, ["phrase"]).select(
+        "phrase", "n_hits"
     )
     return blk.join(latest, on="phrase", how="left").select(
         "phrase",
@@ -1473,47 +1234,11 @@ def stream_key_counts(
     parity proof holds on NULL-carrying data.
 
     State bound: one (count, version) row per distinct key, forever."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
     keyed = stream.where(F.col(key_column).isNotNull()).select(
         F.col(key_column).cast("string").alias("key")
     )
-    out_type = StructType(
-        [
-            StructField("key", StringType(), True),
-            StructField("version", LongType(), False),
-            StructField("n", LongType(), False),
-        ]
-    )
-    state_type = StructType(
-        [
-            StructField("n", LongType(), True),
-            StructField("version", LongType(), True),
-        ]
-    )
-
-    def fold(key, pdf_iter, state: GroupState):
-        if state.exists:
-            n, version = state.get
-        else:
-            n, version = 0, 0
-        for pdf in pdf_iter:
-            n += len(pdf)
-        version += 1
-        state.update((n, version))
-        yield pd.DataFrame(
-            [(key[0], version, n)], columns=["key", "version", "n"]
-        )
-
-    return keyed.groupBy("key").applyInPandasWithState(
-        fold,
-        outputStructType=out_type,
-        stateStructType=state_type,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _versioned_state(
+        keyed, ["key"], "n bigint NOT NULL", "n bigint", _count_step
     )
 
 
@@ -1523,12 +1248,7 @@ def key_counts_from_emissions(emissions: DataFrame) -> DataFrame:
     saw have no row — the finisher joins against the batch reference
     side to restore them (st25 does), because only the reference knows
     the full domain."""
-    w = Window.partitionBy("key")
-    return (
-        emissions.withColumn("_mx", F.max("version").over(w))
-        .where(F.col("version") == F.col("_mx"))
-        .select("key", "n")
-    )
+    return latest_sketch_version(emissions, ["key"]).select("key", "n")
 
 
 def stream_bin_counts(
@@ -1546,16 +1266,6 @@ def stream_bin_counts(
     |edges|+1 keys ever reach the stateful exchange.
 
     State bound: |edges|+1 rows of (count, version), forever."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     if not edges:
         raise ValueError("edges must be non-empty")
     bin_expr = sum(
@@ -1568,39 +1278,8 @@ def stream_bin_counts(
     binned = stream.where(F.col(value_column).isNotNull()).select(
         bin_expr.alias("bin")
     )
-    out_type = StructType(
-        [
-            StructField("bin", IntegerType(), True),
-            StructField("version", LongType(), False),
-            StructField("n", LongType(), False),
-        ]
-    )
-    state_type = StructType(
-        [
-            StructField("n", LongType(), True),
-            StructField("version", LongType(), True),
-        ]
-    )
-
-    def fold(key, pdf_iter, state: GroupState):
-        if state.exists:
-            n, version = state.get
-        else:
-            n, version = 0, 0
-        for pdf in pdf_iter:
-            n += len(pdf)
-        version += 1
-        state.update((n, version))
-        yield pd.DataFrame(
-            [(key[0], version, n)], columns=["bin", "version", "n"]
-        )
-
-    return binned.groupBy("bin").applyInPandasWithState(
-        fold,
-        outputStructType=out_type,
-        stateStructType=state_type,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _versioned_state(
+        binned, ["bin"], "n bigint NOT NULL", "n bigint", _count_step
     )
 
 
@@ -1612,12 +1291,7 @@ def bin_counts_from_emissions(
     bin, exactly like the batch histogram."""
     spark = emissions.sparkSession
     bins = spark.createDataFrame([(b,) for b in range(n_bins)], ["bin"])
-    w = Window.partitionBy("bin")
-    latest = (
-        emissions.withColumn("_mx", F.max("version").over(w))
-        .where(F.col("version") == F.col("_mx"))
-        .select("bin", "n")
-    )
+    latest = latest_sketch_version(emissions, ["bin"]).select("bin", "n")
     return bins.join(latest, on="bin", how="left").select(
         "bin", F.coalesce("n", F.lit(0)).cast("long").alias("n")
     )

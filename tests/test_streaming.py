@@ -616,6 +616,163 @@ def test_stream_cohort_rebases_on_out_of_order_first_event(spark, tmp_path):
     assert v[1] == 2 and v[2] == 2
 
 
+def test_stream_cohort_keeps_days_whose_offset_was_already_present(
+    spark, tmp_path
+):
+    """A day whose week offset the state already holds must still be
+    stored: day 16 lands in offset 0 next to day 10 and publishes
+    nothing, but when day 9 later rebases the cohort, (16-9)//7 = 1 —
+    an offset that exists only if day 16 was kept."""
+    import datetime as dt
+
+    from paqarin_spark.streaming import (
+        cohort_retention_from_emissions,
+        stream_cohort_offsets,
+    )
+
+    base = dt.datetime(2024, 1, 1)
+    schema = "user_id long, ts timestamp"
+    path = str(tmp_path / "cohort_days")
+    for day in (10, 16, 9):
+        spark.createDataFrame(
+            [(1, base + dt.timedelta(days=day))], schema
+        ).coalesce(1).write.mode("append").parquet(path)
+
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(path)
+    )
+    emi = _run(
+        spark, stream_cohort_offsets(stream), "cohort_days", "append"
+    )
+    got = {tuple(r) for r in cohort_retention_from_emissions(emi).collect()}
+    assert got == {
+        ("2024-01-10", 0, 1, 1, 1.0),
+        ("2024-01-10", 1, 1, 1, 1.0),
+    }
+    # day 16 changed no derived offset, so it published no version
+    assert emi.agg(F.max("version")).first()[0] == 2
+
+
+def test_stateful_emission_schemas_are_pinned(spark, tmp_path):
+    """Every versioned stateful operator's emission schema — names,
+    types, nullability — is part of its contract with the finishers
+    and with sinks that outlive a restart. Built over an int-keyed
+    file stream, so a key type taken from the input would show."""
+    from paqarin_spark.streaming import (
+        stream_bin_counts,
+        stream_classify_counts,
+        stream_cohort_offsets,
+        stream_ewma_anomaly,
+        stream_group_topk,
+        stream_key_counts,
+        stream_latest_per_key,
+        stream_phrase_hits,
+        stream_quantile_sketch,
+        stream_view_rollup,
+    )
+
+    schema = (
+        "user_id int, ts timestamp, event_id long, value double, "
+        "event_type string, text string"
+    )
+    path = str(tmp_path / "pin")
+    spark.createDataFrame([], schema).write.parquet(path)
+    s = spark.readStream.schema(schema).parquet(path)
+    scoring = {
+        "labels": ["a", "b"],
+        "prior": {"a": 0, "b": 0},
+        "terms": {"x": {"a": 1, "b": 0}},
+    }
+    built = {
+        "quantile_sketch": stream_quantile_sketch(
+            s, "value", ["event_id"], group_by=["event_type"]
+        ),
+        "cohort_offsets": stream_cohort_offsets(s),
+        "view_rollup": stream_view_rollup(s),
+        "latest_per_key": stream_latest_per_key(s),
+        "group_topk": stream_group_topk(s, "event_type", "value", "event_id"),
+        "classify_counts": stream_classify_counts(s, scoring),
+        "ewma_anomaly": stream_ewma_anomaly(s),
+        "phrase_hits": stream_phrase_hits(s, "text", ["red fox"]),
+        "key_counts": stream_key_counts(s, "event_type"),
+        "bin_counts": stream_bin_counts(s, "value", [0.0, 1.0]),
+    }
+    got = {
+        name: [(f.name, f.dataType.simpleString(), f.nullable)
+               for f in df.schema]
+        for name, df in built.items()
+    }
+    assert all(df.isStreaming for df in built.values())
+    assert got == EMISSION_SCHEMAS
+
+
+EMISSION_SCHEMAS = {
+    "quantile_sketch": [
+        ("event_type", "string", True),
+        ("version", "bigint", False),
+        ("_rk", "bigint", False),
+        ("value", "double", True),
+    ],
+    "cohort_offsets": [
+        ("user_id", "bigint", True),
+        ("version", "bigint", False),
+        ("cohort_epoch_day", "bigint", False),
+        ("week_offset", "bigint", False),
+    ],
+    "view_rollup": [
+        ("user_id", "bigint", True),
+        ("version", "bigint", False),
+        ("n_events", "bigint", False),
+        ("sum_dec", "string", True),
+        ("last_ts_us", "bigint", True),
+    ],
+    "latest_per_key": [
+        ("k", "bigint", True),
+        ("version", "bigint", False),
+        ("last_ts_us", "bigint", True),
+        ("last_id", "bigint", True),
+        ("last_value", "double", True),
+    ],
+    "group_topk": [
+        ("g", "string", True),
+        ("version", "bigint", False),
+        ("rank", "bigint", False),
+        ("id", "bigint", False),
+        ("value", "double", True),
+    ],
+    "classify_counts": [
+        ("label", "string", True),
+        ("version", "bigint", False),
+        ("n_docs", "bigint", False),
+    ],
+    "ewma_anomaly": [
+        ("user_id", "bigint", True),
+        ("version", "bigint", False),
+        ("n_events", "bigint", False),
+        ("n_anomalies", "bigint", False),
+        ("n_late", "bigint", False),
+        ("ewma_repr", "string", True),
+    ],
+    "phrase_hits": [
+        ("phrase", "string", True),
+        ("version", "bigint", False),
+        ("n_hits", "bigint", False),
+    ],
+    "key_counts": [
+        ("key", "string", True),
+        ("version", "bigint", False),
+        ("n", "bigint", False),
+    ],
+    "bin_counts": [
+        ("bin", "int", True),
+        ("version", "bigint", False),
+        ("n", "bigint", False),
+    ],
+}
+
+
 def test_stream_interval_join_left_outer_emits_unmatched(spark, tmp_path):
     """Left-outer mode: clicks with no purchase in the window emit a
     NULL-partner verdict once the watermark closes the window; a late
