@@ -4,8 +4,23 @@ reference — SURVEY.md §2 'Not present').
 
 Design: media travel as ``struct<content: binary, meta: struct<...>>``
 — one row per asset, co-partitioned with the documents that own them.
-All heavy per-asset work (decode, resize, feature extraction, frame
-sampling) runs as Arrow-batched ``mapInPandas`` transforms.
+
+The record lane: every per-asset function is a per-row body run by
+:func:`_map_records`, the module's one ``mapInPandas`` stage (Arrow
+batches stream through one Python stage; nothing is collected to the
+driver). A body yields zero, one or many record dicts; the lane NULLs
+every schema column a record leaves out and keeps the schema's column
+order. The eleven ``*_from_ids`` builders pass ``ids=`` and receive
+each id as an int after :func:`_spread_ids` (the only exchange any of
+these functions adds); every other function receives the input row.
+NULL or unreadable content: ``decode_media``, ``png_pixel_stats``,
+``jpeg_pixel_stats`` and ``wav_audio_stats`` emit the asset with NULL
+stats; ``gif_pixel_stats``, ``wav_dft_features``,
+``transcode_png_to_gif`` and ``extract_features`` skip it;
+``tar_members_table``/``zip_members_table`` emit one NULL-member row
+per archive (keeping its shard_id, NULL included); ``resize_images``
+keeps the bytes; ``sample_frames`` and ``chunk_audio`` read only the
+metadata and hash NULL content as empty bytes.
 
 Codecs: uncompressed BMP (BITMAPINFOHEADER, 24bpp), PCM WAV
 (RIFF/WAVE), PNG (8-bit gray/RGB/palette/alpha, zlib-inflated IDAT
@@ -552,24 +567,6 @@ def _decode_bytes(content: bytes | None, meta) -> dict | None:
     return decoded
 
 
-def decode_media(df: DataFrame) -> DataFrame:
-    """Decode assets to per-asset records via Arrow-batched mapInPandas.
-
-    Batches stream through Python with Arrow transfer; nothing is
-    collected to the driver. O(1) state per batch."""
-    nulls = {f.name: None for f in DECODED_SCHEMA.fields if f.name != "asset_id"}
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                decoded = _decode_bytes(row["content"], row["meta"])
-                out.append({"asset_id": row["asset_id"], **(decoded or nulls)})
-            yield pd.DataFrame(out, columns=[f.name for f in DECODED_SCHEMA.fields])
-
-    return df.mapInPandas(decode, schema=DECODED_SCHEMA)
-
-
 def _spread_ids(df: DataFrame, id_column: str) -> DataFrame:
     """Id projection repartitioned across the cluster before a
     per-asset codec stage: a single-file parquet scan arrives as ONE
@@ -581,6 +578,70 @@ def _spread_ids(df: DataFrame, id_column: str) -> DataFrame:
     return ids.repartition(par, F.col(id_column))
 
 
+def _map_records(
+    df: DataFrame, schema: StructType, fn, ids: str | None = None
+) -> DataFrame:
+    """The record lane: one Arrow-batched ``mapInPandas`` stage that
+    calls ``fn`` once per input row. ``fn`` yields zero, one or many
+    record dicts; a schema column a record leaves out is NULL, keys
+    outside the schema are dropped, and each batch comes back as one
+    frame in schema column order. ``fn`` receives the row as a dict,
+    or — with ``ids`` — each id of that column as a Python int after
+    :func:`_spread_ids`."""
+    cols = schema.fieldNames()
+    if ids is not None:
+        df = _spread_ids(df, ids)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = (
+                [int(v) for v in pdf[ids]]
+                if ids is not None
+                else pdf.to_dict("records")
+            )
+            yield pd.DataFrame(
+                [[rec.get(c) for c in cols] for row in rows for rec in fn(row)],
+                columns=cols,
+            )
+
+    return df.mapInPandas(run, schema=schema)
+
+
+def _media_row(
+    aid: int,
+    content: bytes,
+    media_type: str,
+    fmt: str,
+    width: int | None = None,
+    height: int | None = None,
+) -> dict:
+    """One :data:`MEDIA_SCHEMA` record; frame count and sample rate
+    stay NULL."""
+    return {
+        "asset_id": aid,
+        "content": content,
+        "meta": {
+            "media_type": media_type,
+            "format": fmt,
+            "width": width,
+            "height": height,
+            "n_frames": None,
+            "sample_rate": None,
+        },
+    }
+
+
+def decode_media(df: DataFrame) -> DataFrame:
+    """Decode assets to per-asset records (one row each; NULL stats
+    for NULL content)."""
+
+    def decode(row: dict):
+        decoded = _decode_bytes(row["content"], row["meta"])
+        yield {"asset_id": row["asset_id"], **(decoded or {})}
+
+    return _map_records(df, DECODED_SCHEMA, decode)
+
+
 def codec_assets_from_ids(df: DataFrame, id_column: str) -> DataFrame:
     """Deterministic REAL-codec asset table from an id column: even ids
     become 24bpp BMPs (width = id%8+1, height = id%6+1), odd ids become
@@ -589,34 +650,15 @@ def codec_assets_from_ids(df: DataFrame, id_column: str) -> DataFrame:
     so anything a decoder reports can only have come from the bytes.
     """
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid in pdf[id_column]:
-                aid = int(aid)
-                if aid % 2 == 0:
-                    content = encode_bmp(aid % 8 + 1, aid % 6 + 1)
-                    media_type, fmt = "image", "bmp"
-                else:
-                    content = encode_wav(8000 + aid % 4 * 1000, aid % 100 + 1)
-                    media_type, fmt = "audio", "wav"
-                rows.append(
-                    {
-                        "asset_id": aid,
-                        "content": content,
-                        "meta": {
-                            "media_type": media_type,
-                            "format": fmt,
-                            "width": None,
-                            "height": None,
-                            "n_frames": None,
-                            "sample_rate": None,
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "content", "meta"])
+    def build(aid: int):
+        if aid % 2 == 0:
+            bmp = encode_bmp(aid % 8 + 1, aid % 6 + 1)
+            yield _media_row(aid, bmp, "image", "bmp")
+        else:
+            wav = encode_wav(8000 + aid % 4 * 1000, aid % 100 + 1)
+            yield _media_row(aid, wav, "audio", "wav")
 
-    return _spread_ids(df, id_column).mapInPandas(build, schema=MEDIA_SCHEMA)
+    return _map_records(df, MEDIA_SCHEMA, build, ids=id_column)
 
 
 def png_assets_from_ids(
@@ -634,38 +676,20 @@ def png_assets_from_ids(
     deliberately withheld: anything a decoder reports can only have
     come from the compressed bytes."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid in pdf[id_column]:
-                aid = int(aid)
-                content = encode_png(
-                    aid % 6 + base,
-                    aid % 5 + base,
-                    interlace=interlace,
-                    pixel_fn=lambda x, y, a=aid: (
-                        (x + y + a) % 256,
-                        (2 * x + y + a) % 256,
-                        (x * y + a) % 256,
-                    ),
-                )
-                rows.append(
-                    {
-                        "asset_id": aid,
-                        "content": content,
-                        "meta": {
-                            "media_type": "image",
-                            "format": "png",
-                            "width": None,
-                            "height": None,
-                            "n_frames": None,
-                            "sample_rate": None,
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "content", "meta"])
+    def build(aid: int):
+        content = encode_png(
+            aid % 6 + base,
+            aid % 5 + base,
+            interlace=interlace,
+            pixel_fn=lambda x, y: (
+                (x + y + aid) % 256,
+                (2 * x + y + aid) % 256,
+                (x * y + aid) % 256,
+            ),
+        )
+        yield _media_row(aid, content, "image", "png")
 
-    return _spread_ids(df, id_column).mapInPandas(build, schema=MEDIA_SCHEMA)
+    return _map_records(df, MEDIA_SCHEMA, build, ids=id_column)
 
 
 PNG_STATS_SCHEMA = StructType(
@@ -687,34 +711,27 @@ def png_pixel_stats(df: DataFrame) -> DataFrame:
     mapInPandas; grayscale/alpha channels fold as (r=g=b=gray)."""
     import numpy as np
 
-    cols = [f.name for f in PNG_STATS_SCHEMA.fields]
+    def stats(row: dict):
+        rec = {"asset_id": row["asset_id"]}
+        png = parse_png(row["content"]) if row["content"] is not None else None
+        if png is not None:
+            rec["width"] = png["width"]
+            rec["height"] = png["height"]
+            if png["pixels"] is not None:
+                mat = np.frombuffer(png["pixels"], dtype=np.uint8).astype(
+                    np.float64
+                ).reshape(-1, png["channels"])
+                means = mat.mean(axis=0)
+                if png["channels"] >= 3:
+                    r, g, b = means[0], means[1], means[2]
+                else:  # gray / gray+alpha
+                    r = g = b = means[0]
+                rec["mean_r"] = round(r, 6)
+                rec["mean_g"] = round(g, 6)
+                rec["mean_b"] = round(b, 6)
+        yield rec
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                rec = {"asset_id": row["asset_id"], "width": None, "height": None,
-                       "mean_r": None, "mean_g": None, "mean_b": None}
-                png = parse_png(row["content"]) if row["content"] is not None else None
-                if png is not None:
-                    rec["width"] = png["width"]
-                    rec["height"] = png["height"]
-                    if png["pixels"] is not None:
-                        mat = np.frombuffer(png["pixels"], dtype=np.uint8).astype(
-                            np.float64
-                        ).reshape(-1, png["channels"])
-                        means = mat.mean(axis=0)
-                        if png["channels"] >= 3:
-                            r, g, b = means[0], means[1], means[2]
-                        else:  # gray / gray+alpha
-                            r = g = b = means[0]
-                        rec["mean_r"] = round(r, 6)
-                        rec["mean_g"] = round(g, 6)
-                        rec["mean_b"] = round(b, 6)
-                rows.append(rec)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(stats, schema=PNG_STATS_SCHEMA)
+    return _map_records(df, PNG_STATS_SCHEMA, stats)
 
 
 def extract_features(df: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
@@ -722,27 +739,23 @@ def extract_features(df: DataFrame, dim: int = FEATURE_DIM) -> DataFrame:
 
     STUB features: deterministic bytes-derived values standing in for a
     real embedding model. Long form keeps the schema stable as ``dim``
-    changes and feeds the similarity operators directly."""
+    changes and feeds the similarity operators directly. Each value is
+    one byte of the content's sha256 digest, so ``dim`` is 1..32."""
+    if not 1 <= dim <= 32:
+        raise ValueError(f"dim must be in 1..32 (sha256 digest bytes), got {dim}")
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                content = row["content"]
-                if content is None:
-                    continue
-                digest = hashlib.sha256(content).digest()
-                for j in range(dim):
-                    rows.append(
-                        {
-                            "asset_id": row["asset_id"],
-                            "feature": f"f{j}",
-                            "value": digest[j] / 255.0,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=["asset_id", "feature", "value"])
+    def feats(row: dict):
+        if row["content"] is None:
+            return
+        digest = hashlib.sha256(row["content"]).digest()
+        for j in range(dim):
+            yield {
+                "asset_id": row["asset_id"],
+                "feature": f"f{j}",
+                "value": digest[j] / 255.0,
+            }
 
-    return df.mapInPandas(feats, schema=FEATURES_SCHEMA)
+    return _map_records(df, FEATURES_SCHEMA, feats)
 
 
 def resize_png(content: bytes, width: int, height: int) -> bytes | None:
@@ -774,27 +787,20 @@ def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
     metadata (the documented stub path — swap PIL in right here for
     jpeg and friends, nothing else changes)."""
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf.copy()
-            contents = []
-            for content in out["content"]:
-                resized = (
-                    resize_png(content, width, height)
-                    if content is not None
-                    else None
-                )
-                contents.append(resized if resized is not None else content)
-            out["content"] = contents
-            out["meta"] = [
-                None
-                if m is None
-                else {**m, "width": width, "height": height}
-                for m in out["meta"]
-            ]
-            yield out
+    def resize(row: dict):
+        content, meta = row["content"], row["meta"]
+        resized = (
+            resize_png(content, width, height) if content is not None else None
+        )
+        yield {
+            **row,
+            "content": content if resized is None else resized,
+            "meta": (
+                None if meta is None else {**meta, "width": width, "height": height}
+            ),
+        }
 
-    return df.mapInPandas(resize, schema=df.schema)
+    return _map_records(df, df.schema, resize)
 
 
 def sample_frames(df: DataFrame, every_nth: int = 2) -> DataFrame:
@@ -802,6 +808,8 @@ def sample_frames(df: DataFrame, every_nth: int = 2) -> DataFrame:
     ``(asset_id, frame_index, frame_hash)``. Frame decode is stubbed;
     the fan-out shape (1 asset row -> n_frames/every_nth rows) is real.
     """
+    if every_nth < 1:
+        raise ValueError(f"every_nth must be >= 1, got {every_nth}")
     schema = StructType(
         [
             StructField("asset_id", LongType(), False),
@@ -810,25 +818,18 @@ def sample_frames(df: DataFrame, every_nth: int = 2) -> DataFrame:
         ]
     )
 
-    def frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                meta = row["meta"]
-                if meta is None or meta["media_type"] != "video":
-                    continue
-                # nullable struct ints arrive as floats through Arrow
-                n = int(meta["n_frames"] or 0)
-                for idx in range(0, n, every_nth):
-                    h = hashlib.md5(
-                        (row["content"] or b"") + idx.to_bytes(4, "big")
-                    ).hexdigest()
-                    rows.append(
-                        {"asset_id": row["asset_id"], "frame_index": idx, "frame_hash": h}
-                    )
-            yield pd.DataFrame(rows, columns=["asset_id", "frame_index", "frame_hash"])
+    def frames(row: dict):
+        meta = row["meta"]
+        if meta is None or meta["media_type"] != "video":
+            return
+        # nullable struct ints arrive as floats through Arrow
+        for idx in range(0, int(meta["n_frames"] or 0), every_nth):
+            h = hashlib.md5(
+                (row["content"] or b"") + idx.to_bytes(4, "big")
+            ).hexdigest()
+            yield {"asset_id": row["asset_id"], "frame_index": idx, "frame_hash": h}
 
-    return df.mapInPandas(frames, schema=schema)
+    return _map_records(df, schema, frames)
 
 
 def chunk_audio(df: DataFrame, window_seconds: float = 1.0) -> DataFrame:
@@ -852,39 +853,29 @@ def chunk_audio(df: DataFrame, window_seconds: float = 1.0) -> DataFrame:
         ]
     )
 
-    def chunks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["asset_id", "chunk_index", "start_sample", "n_samples", "chunk_hash"]
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                meta = row["meta"]
-                if meta is None or meta["media_type"] != "audio":
-                    continue
-                # nullable struct ints arrive as floats through Arrow
-                rate = int(meta["sample_rate"] or 0)
-                total = int(meta["n_frames"] or 0)
-                if rate <= 0 or total <= 0:
-                    continue
-                per = max(int(rate * window_seconds), 1)
-                idx = 0
-                for start in range(0, total, per):
-                    n = min(per, total - start)
-                    h = hashlib.md5(
-                        (row["content"] or b"") + start.to_bytes(8, "big")
-                    ).hexdigest()
-                    rows.append(
-                        {
-                            "asset_id": row["asset_id"],
-                            "chunk_index": idx,
-                            "start_sample": start,
-                            "n_samples": n,
-                            "chunk_hash": h,
-                        }
-                    )
-                    idx += 1
-            yield pd.DataFrame(rows, columns=cols)
+    def chunks(row: dict):
+        meta = row["meta"]
+        if meta is None or meta["media_type"] != "audio":
+            return
+        # nullable struct ints arrive as floats through Arrow
+        rate = int(meta["sample_rate"] or 0)
+        total = int(meta["n_frames"] or 0)
+        if rate <= 0 or total <= 0:
+            return
+        per = max(int(rate * window_seconds), 1)
+        for idx, start in enumerate(range(0, total, per)):
+            h = hashlib.md5(
+                (row["content"] or b"") + start.to_bytes(8, "big")
+            ).hexdigest()
+            yield {
+                "asset_id": row["asset_id"],
+                "chunk_index": idx,
+                "start_sample": start,
+                "n_samples": min(per, total - start),
+                "chunk_hash": h,
+            }
 
-    return df.mapInPandas(chunks, schema=schema)
+    return _map_records(df, schema, chunks)
 
 
 def media_table(spark, rows: list[tuple]) -> DataFrame:
@@ -1183,40 +1174,17 @@ def mp4_sample_stats_from_ids(df: DataFrame, id_column: str) -> DataFrame:
     offset, from id arithmetic. Linear scan, no shuffle — the shard
     planner a 100-TB video ingest runs before any decode."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid in pdf[id_column]:
-                aid = int(aid)
-                n = aid % 7 + 2
-                samples = [
-                    bytes([(aid + k) % 256]) * ((aid * 31 + k * 17) % 113 + 1)
-                    for k in range(n)
-                ]
-                content = encode_mp4_with_samples(samples)
-                meta = parse_mp4_sample_table(content)
-                rows.append(
-                    {
-                        "asset_id": aid,
-                        "n_samples": meta["n_samples"] if meta else None,
-                        "total_sample_bytes": (
-                            meta["total_sample_bytes"] if meta else None
-                        ),
-                        "max_sample_bytes": (
-                            meta["max_sample_bytes"] if meta else None
-                        ),
-                        "chunk_offset": meta["chunk_offset"] if meta else None,
-                        "first_byte_sum": meta["first_byte_sum"] if meta else None,
-                        "n_bytes": len(content),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in SAMPLE_TABLE_SCHEMA.fields]
-            )
+    def build(aid: int):
+        n = aid % 7 + 2
+        samples = [
+            bytes([(aid + k) % 256]) * ((aid * 31 + k * 17) % 113 + 1)
+            for k in range(n)
+        ]
+        content = encode_mp4_with_samples(samples)
+        table = parse_mp4_sample_table(content)
+        yield {**(table or {}), "asset_id": aid, "n_bytes": len(content)}
 
-    return _spread_ids(df, id_column).mapInPandas(
-        build, schema=SAMPLE_TABLE_SCHEMA
-    )
+    return _map_records(df, SAMPLE_TABLE_SCHEMA, build, ids=id_column)
 
 
 MJPEG_STATS_SCHEMA = StructType(
@@ -1260,59 +1228,33 @@ def mjpeg_frame_stats_from_ids(df: DataFrame, id_column: str) -> DataFrame:
 
     from paqarin_spark.jpeg import encode_jpeg, parse_jpeg
 
-    cols = [f.name for f in MJPEG_STATS_SCHEMA.fields]
+    def build(aid: int):
+        n = aid % 3 + 2
+        w, h = (aid % 2 + 1) * 8, 8
+        frames = []
+        for k in range(n):
+            img = np.zeros((h, w, 3), dtype=np.uint8)
+            img[..., 0] = (7 * aid + 19 * k) % 256
+            img[..., 1] = (13 * aid + 5 + 23 * k) % 256
+            img[..., 2] = (29 * aid + 11 + 31 * k) % 256
+            frames.append(
+                encode_jpeg(
+                    img,
+                    subsampling="444" if (aid + k) % 2 == 0 else "420",
+                )
+            )
+        content = encode_mp4_with_samples(frames)
+        # decode side: everything below reads ONLY `content`
+        table = parse_mp4_sample_table(content)
+        if table is None:
+            return  # malformed container: no frame rows
+        pos = table["chunk_offset"]
+        for k, sz in enumerate(table["sample_sizes"]):
+            jpg = parse_jpeg(content[pos : pos + sz])
+            pos += sz
+            yield {"asset_id": aid, "frame_index": k, **_jpeg_stats(jpg)}
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid in pdf[id_column]:
-                aid = int(aid)
-                n = aid % 3 + 2
-                w, h = (aid % 2 + 1) * 8, 8
-                frames = []
-                for k in range(n):
-                    img = np.zeros((h, w, 3), dtype=np.uint8)
-                    img[..., 0] = (7 * aid + 19 * k) % 256
-                    img[..., 1] = (13 * aid + 5 + 23 * k) % 256
-                    img[..., 2] = (29 * aid + 11 + 31 * k) % 256
-                    frames.append(
-                        encode_jpeg(
-                            img,
-                            subsampling="444" if (aid + k) % 2 == 0 else "420",
-                        )
-                    )
-                content = encode_mp4_with_samples(frames)
-                # decode side: everything below reads ONLY `content`
-                table = parse_mp4_sample_table(content)
-                if table is None:
-                    continue  # malformed container: no frame rows
-                pos = table["chunk_offset"]
-                for k, sz in enumerate(table["sample_sizes"]):
-                    rec = {
-                        "asset_id": aid, "frame_index": k, "width": None,
-                        "height": None, "mean_r": None, "mean_g": None,
-                        "mean_b": None,
-                    }
-                    jpg = parse_jpeg(content[pos : pos + sz])
-                    pos += sz
-                    if jpg is not None:
-                        rec["width"] = jpg["width"]
-                        rec["height"] = jpg["height"]
-                        px = jpg["pixels"].astype(np.float64)
-                        means = (
-                            [px.mean()] * 3
-                            if px.ndim == 2
-                            else px.reshape(-1, px.shape[-1]).mean(axis=0)
-                        )
-                        rec["mean_r"] = round(float(means[0]), 6)
-                        rec["mean_g"] = round(float(means[1]), 6)
-                        rec["mean_b"] = round(float(means[2]), 6)
-                    rows.append(rec)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return _spread_ids(df, id_column).mapInPandas(
-        build, schema=MJPEG_STATS_SCHEMA
-    )
+    return _map_records(df, MJPEG_STATS_SCHEMA, build, ids=id_column)
 
 
 PROBE_SCHEMA = StructType(
@@ -1339,46 +1281,23 @@ def probe_media_from_ids(df: DataFrame, id_column: str) -> DataFrame:
     runs BEFORE any decode: cheap header walks to route/filter/shard
     assets, linear scan, no shuffle."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid in pdf[id_column]:
-                aid = int(aid)
-                if aid % 2 == 0:
-                    content = encode_jpeg_shell(
-                        aid % 640 + 16, aid % 480 + 16, b"x" * (aid % 50)
-                    )
-                    meta = parse_jpeg_meta(content)
-                    rows.append(
-                        {
-                            "asset_id": aid,
-                            "kind": "jpeg",
-                            "width": meta["width"],
-                            "height": meta["height"],
-                            "n_components": meta["n_components"],
-                            "duration_ms": None,
-                            "n_bytes": len(content),
-                        }
-                    )
-                else:
-                    content = encode_mp4_shell(
-                        aid % 9000 + 1000, 1000, aid % 50
-                    )
-                    meta = parse_mp4_meta(content)
-                    rows.append(
-                        {
-                            "asset_id": aid,
-                            "kind": "mp4",
-                            "width": None,
-                            "height": None,
-                            "n_components": None,
-                            "duration_ms": meta["duration"],
-                            "n_bytes": len(content),
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in PROBE_SCHEMA.fields])
+    def build(aid: int):
+        if aid % 2 == 0:
+            content = encode_jpeg_shell(
+                aid % 640 + 16, aid % 480 + 16, b"x" * (aid % 50)
+            )
+            meta = parse_jpeg_meta(content)
+            yield {**meta, "asset_id": aid, "kind": "jpeg", "n_bytes": len(content)}
+        else:
+            content = encode_mp4_shell(aid % 9000 + 1000, 1000, aid % 50)
+            yield {
+                "asset_id": aid,
+                "kind": "mp4",
+                "duration_ms": parse_mp4_meta(content)["duration"],
+                "n_bytes": len(content),
+            }
 
-    return _spread_ids(df, id_column).mapInPandas(build, schema=PROBE_SCHEMA)
+    return _map_records(df, PROBE_SCHEMA, build, ids=id_column)
 
 
 def jpeg_assets_from_ids(df: DataFrame, id_column: str) -> DataFrame:
@@ -1396,36 +1315,37 @@ def jpeg_assets_from_ids(df: DataFrame, id_column: str) -> DataFrame:
 
     from paqarin_spark.jpeg import encode_jpeg
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid in pdf[id_column]:
-                aid = int(aid)
-                w, h = (aid % 4 + 1) * 8, (aid % 3 + 1) * 8
-                img = np.zeros((h, w, 3), dtype=np.uint8)
-                img[..., 0] = 7 * aid % 256
-                img[..., 1] = (13 * aid + 5) % 256
-                img[..., 2] = (29 * aid + 11) % 256
-                content = encode_jpeg(
-                    img, subsampling="444" if aid % 2 == 0 else "420"
-                )
-                rows.append(
-                    {
-                        "asset_id": aid,
-                        "content": content,
-                        "meta": {
-                            "media_type": "image",
-                            "format": "jpeg",
-                            "width": None,
-                            "height": None,
-                            "n_frames": None,
-                            "sample_rate": None,
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "content", "meta"])
+    def build(aid: int):
+        w, h = (aid % 4 + 1) * 8, (aid % 3 + 1) * 8
+        img = np.zeros((h, w, 3), dtype=np.uint8)
+        img[..., 0] = 7 * aid % 256
+        img[..., 1] = (13 * aid + 5) % 256
+        img[..., 2] = (29 * aid + 11) % 256
+        content = encode_jpeg(img, subsampling="444" if aid % 2 == 0 else "420")
+        yield _media_row(aid, content, "image", "jpeg")
 
-    return _spread_ids(df, id_column).mapInPandas(build, schema=MEDIA_SCHEMA)
+    return _map_records(df, MEDIA_SCHEMA, build, ids=id_column)
+
+
+def _jpeg_stats(jpg: dict | None) -> dict:
+    """width/height and 6dp channel means of one decoded JPEG (gray
+    folds as r=g=b); empty for an undecodable one."""
+    import numpy as np
+
+    if jpg is None:
+        return {}
+    px = jpg["pixels"].astype(np.float64)
+    if px.ndim == 2:  # grayscale
+        means = [px.mean()] * 3
+    else:
+        means = px.reshape(-1, px.shape[-1]).mean(axis=0)
+    return {
+        "width": jpg["width"],
+        "height": jpg["height"],
+        "mean_r": round(float(means[0]), 6),
+        "mean_g": round(float(means[1]), 6),
+        "mean_b": round(float(means[2]), 6),
+    }
 
 
 def jpeg_pixel_stats(df: DataFrame) -> DataFrame:
@@ -1434,35 +1354,14 @@ def jpeg_pixel_stats(df: DataFrame) -> DataFrame:
     all on the hot path): width/height from SOF0 and channel means
     over the reconstructed pixels. Arrow-batched mapInPandas, same
     shape as :func:`png_pixel_stats`."""
-    import numpy as np
-
     from paqarin_spark.jpeg import parse_jpeg
 
-    cols = [f.name for f in PNG_STATS_SCHEMA.fields]
+    def stats(row: dict):
+        content = row["content"]
+        jpg = parse_jpeg(bytes(content)) if content is not None else None
+        yield {"asset_id": row["asset_id"], **_jpeg_stats(jpg)}
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                rec = {"asset_id": row["asset_id"], "width": None, "height": None,
-                       "mean_r": None, "mean_g": None, "mean_b": None}
-                content = row["content"]
-                jpg = parse_jpeg(bytes(content)) if content is not None else None
-                if jpg is not None:
-                    rec["width"] = jpg["width"]
-                    rec["height"] = jpg["height"]
-                    px = jpg["pixels"].astype(np.float64)
-                    if px.ndim == 2:  # grayscale
-                        means = [px.mean()] * 3
-                    else:
-                        means = px.reshape(-1, px.shape[-1]).mean(axis=0)
-                    rec["mean_r"] = round(float(means[0]), 6)
-                    rec["mean_g"] = round(float(means[1]), 6)
-                    rec["mean_b"] = round(float(means[2]), 6)
-                rows.append(rec)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(stats, schema=PNG_STATS_SCHEMA)
+    return _map_records(df, PNG_STATS_SCHEMA, stats)
 
 
 WAV_STATS_SCHEMA = StructType(
@@ -1483,35 +1382,16 @@ def wav_assets_from_ids(df: DataFrame, id_column: str) -> DataFrame:
     whose every value is id-arithmetic, so decoded FEATURES (not just
     counts) are SQL-checkable."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid in pdf[id_column]:
-                aid = int(aid)
-                step = aid % 7 + 1
-                content = encode_wav(
-                    8000 + aid % 4 * 1000,
-                    aid % 100 + 1,
-                    sample_fn=lambda i, a=aid, s=step: ((i * s * 37 + a) % 4001)
-                    - 2000,
-                )
-                rows.append(
-                    {
-                        "asset_id": aid,
-                        "content": content,
-                        "meta": {
-                            "media_type": "audio",
-                            "format": "wav",
-                            "width": None,
-                            "height": None,
-                            "n_frames": None,
-                            "sample_rate": None,
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "content", "meta"])
+    def build(aid: int):
+        step = aid % 7 + 1
+        content = encode_wav(
+            8000 + aid % 4 * 1000,
+            aid % 100 + 1,
+            sample_fn=lambda i: ((i * step * 37 + aid) % 4001) - 2000,
+        )
+        yield _media_row(aid, content, "audio", "wav")
 
-    return _spread_ids(df, id_column).mapInPandas(build, schema=MEDIA_SCHEMA)
+    return _map_records(df, MEDIA_SCHEMA, build, ids=id_column)
 
 
 def wav_audio_stats(df: DataFrame) -> DataFrame:
@@ -1522,29 +1402,18 @@ def wav_audio_stats(df: DataFrame) -> DataFrame:
     any audio featurization pipeline, Arrow-batched mapInPandas."""
     import numpy as np
 
-    cols = [f.name for f in WAV_STATS_SCHEMA.fields]
+    def stats(row: dict):
+        rec = {"asset_id": row["asset_id"]}
+        content = row["content"]
+        s = parse_wav_samples(bytes(content)) if content is not None else None
+        if s is not None and len(s):
+            rec["n_samples"] = int(len(s))
+            rec["mean_abs"] = round(float(np.abs(s).mean()), 6)
+            rec["peak"] = int(np.abs(s).max())
+            rec["zero_crossings"] = int((s[:-1] * s[1:] < 0).sum())
+        yield rec
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                rec = {"asset_id": row["asset_id"], "n_samples": None,
-                       "mean_abs": None, "peak": None, "zero_crossings": None}
-                content = row["content"]
-                s = (
-                    parse_wav_samples(bytes(content))
-                    if content is not None
-                    else None
-                )
-                if s is not None and len(s):
-                    rec["n_samples"] = int(len(s))
-                    rec["mean_abs"] = round(float(np.abs(s).mean()), 6)
-                    rec["peak"] = int(np.abs(s).max())
-                    rec["zero_crossings"] = int((s[:-1] * s[1:] < 0).sum())
-                rows.append(rec)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(stats, schema=WAV_STATS_SCHEMA)
+    return _map_records(df, WAV_STATS_SCHEMA, stats)
 
 
 WAV_DFT_SCHEMA = StructType(
@@ -1592,58 +1461,39 @@ def wav_dft_features(
 
     import numpy as np
 
-    cols = [f.name for f in WAV_DFT_SCHEMA.fields]
+    # Python-int summation: per-term units reach |sample|*1e12 (3.3e16
+    # for 16-bit PCM), so an int64 accumulator would wrap on long
+    # correlated clips while the oracle's DECIMAL(38,12) doesn't;
+    # arbitrary-precision ints stay exact at any n. Round-half-away via
+    # floor(x+0.5) only BELOW 2^52: above it doubles are already
+    # integral and the +0.5 would tie-to-even, bumping odd values —
+    # the oracle's DECIMAL cast takes them verbatim
+    def _units(t: np.ndarray) -> int:
+        a = np.abs(t) * 1e12
+        u = np.where(a >= 2.0**52, a, np.floor(a + 0.5))
+        return sum(int(v) for v in (u * np.sign(t)))
 
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                content = row["content"]
-                s = (
-                    parse_wav_samples(bytes(content))
-                    if content is not None
-                    else None
-                )
-                if s is None or not len(s):
-                    continue
-                x = s.astype(np.float64)
-                n = len(x)
-                idx = np.arange(n, dtype=np.float64)
-                for k in bins:
-                    ang = (2.0 * math.pi * float(k)) * idx / float(n)
-                    tr = x * np.cos(ang)
-                    ti = x * np.sin(ang)
-                    # Python-int summation: per-term units reach
-                    # |sample|*1e12 (3.3e16 for 16-bit PCM), so an
-                    # int64 accumulator would wrap on long correlated
-                    # clips while the oracle's DECIMAL(38,12) doesn't;
-                    # arbitrary-precision ints stay exact at any n.
-                    # Round-half-away via floor(x+0.5) only BELOW
-                    # 2^52: above it doubles are already integral and
-                    # the +0.5 would tie-to-even, bumping odd values —
-                    # the oracle's DECIMAL cast takes them verbatim
-                    def _units(t: np.ndarray) -> int:
-                        a = np.abs(t) * 1e12
-                        u = np.where(a >= 2.0**52, a, np.floor(a + 0.5))
-                        return sum(int(v) for v in (u * np.sign(t)))
+    def feats(row: dict):
+        content = row["content"]
+        s = parse_wav_samples(bytes(content)) if content is not None else None
+        if s is None or not len(s):
+            return
+        x = s.astype(np.float64)
+        n = len(x)
+        idx = np.arange(n, dtype=np.float64)
+        for k in bins:
+            ang = (2.0 * math.pi * float(k)) * idx / float(n)
+            re = float(_units(x * np.cos(ang))) / 1e12
+            im = float(_units(x * np.sin(ang))) / 1e12
+            mag = math.sqrt(re * re + im * im) / float(n)
+            yield {
+                "asset_id": int(row["asset_id"]),
+                "bin": int(k),
+                "n_samples": n,
+                "magnitude": math.floor(abs(mag) * 1e6 + 0.5) / 1e6,
+            }
 
-                    re_u = _units(tr)
-                    im_u = _units(ti)
-                    re = float(re_u) / 1e12
-                    im = float(im_u) / 1e12
-                    mag = math.sqrt(re * re + im * im) / float(n)
-                    scaled = abs(mag) * 1e6
-                    rows.append(
-                        {
-                            "asset_id": int(row["asset_id"]),
-                            "bin": int(k),
-                            "n_samples": n,
-                            "magnitude": math.floor(scaled + 0.5) / 1e6,
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(feats, schema=WAV_DFT_SCHEMA)
+    return _map_records(df, WAV_DFT_SCHEMA, feats)
 
 
 # --- GIF89a / LZW -------------------------------------------------------
@@ -1874,35 +1724,14 @@ def gif_assets_from_ids(df: DataFrame, id_column: str) -> DataFrame:
     trip (the wav_assets_from_ids discipline for the compressed-image
     class)."""
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid in pdf[id_column]:
-                aid = int(aid)
-                w = aid % 16 + 1
-                h = aid % 12 + 1
-                idx = bytes(
-                    (x + y * w + aid) % 4
-                    for y in range(h)
-                    for x in range(w)
-                )
-                rows.append(
-                    {
-                        "asset_id": aid,
-                        "content": encode_gif(w, h, list(GIF_PALETTE), idx),
-                        "meta": {
-                            "media_type": "image",
-                            "format": "gif",
-                            "width": w,
-                            "height": h,
-                            "n_frames": None,
-                            "sample_rate": None,
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "content", "meta"])
+    def build(aid: int):
+        w = aid % 16 + 1
+        h = aid % 12 + 1
+        idx = bytes((x + y * w + aid) % 4 for y in range(h) for x in range(w))
+        content = encode_gif(w, h, list(GIF_PALETTE), idx)
+        yield _media_row(aid, content, "image", "gif", w, h)
 
-    return _spread_ids(df, id_column).mapInPandas(build, schema=MEDIA_SCHEMA)
+    return _map_records(df, MEDIA_SCHEMA, build, ids=id_column)
 
 
 def gif_pixel_stats(df: DataFrame) -> DataFrame:
@@ -1913,36 +1742,23 @@ def gif_pixel_stats(df: DataFrame) -> DataFrame:
     fail the parse are skipped (no pixel evidence)."""
     import math
 
-    cols = [f.name for f in GIF_STATS_SCHEMA.fields]
+    def stats(row: dict):
+        content = row["content"]
+        g = parse_gif(bytes(content)) if content is not None else None
+        if g is None:
+            return
+        idx = g["indices"]
+        n = len(idx)
+        yield {
+            "asset_id": int(row["asset_id"]),
+            "width": g["width"],
+            "height": g["height"],
+            "n_pixels": n,
+            "mean_index": math.floor(sum(idx) / n * 1e6 + 0.5) / 1e6 if n else None,
+            "count_c0": idx.count(0),
+        }
 
-    def stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                content = row["content"]
-                g = parse_gif(bytes(content)) if content is not None else None
-                if g is None:
-                    continue
-                idx = g["indices"]
-                n = len(idx)
-                mean = sum(idx) / n if n else None
-                rows.append(
-                    {
-                        "asset_id": int(row["asset_id"]),
-                        "width": g["width"],
-                        "height": g["height"],
-                        "n_pixels": n,
-                        "mean_index": (
-                            math.floor(mean * 1e6 + 0.5) / 1e6
-                            if mean is not None
-                            else None
-                        ),
-                        "count_c0": idx.count(0),
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(stats, schema=GIF_STATS_SCHEMA)
+    return _map_records(df, GIF_STATS_SCHEMA, stats)
 
 
 def transcode_png_to_gif(df: DataFrame) -> DataFrame:
@@ -1955,37 +1771,20 @@ def transcode_png_to_gif(df: DataFrame) -> DataFrame:
     doesn't reconstruct pixels for) are skipped — no pixel evidence,
     no output. Arrow-batched linear pass, no shuffle."""
 
-    def tx(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                content = row["content"]
-                g = parse_png(bytes(content)) if content is not None else None
-                if g is None or g.get("pixels") is None or g["channels"] != 3:
-                    continue
-                w, h = g["width"], g["height"]
-                px = g["pixels"]
-                idx = bytes(
-                    (px[3 * i] + px[3 * i + 1] + px[3 * i + 2]) % 4
-                    for i in range(w * h)
-                )
-                rows.append(
-                    {
-                        "asset_id": int(row["asset_id"]),
-                        "content": encode_gif(w, h, list(GIF_PALETTE), idx),
-                        "meta": {
-                            "media_type": "image",
-                            "format": "gif",
-                            "width": w,
-                            "height": h,
-                            "n_frames": None,
-                            "sample_rate": None,
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["asset_id", "content", "meta"])
+    def tx(row: dict):
+        content = row["content"]
+        g = parse_png(bytes(content)) if content is not None else None
+        if g is None or g.get("pixels") is None or g["channels"] != 3:
+            return
+        w, h = g["width"], g["height"]
+        px = g["pixels"]
+        idx = bytes(
+            (px[3 * i] + px[3 * i + 1] + px[3 * i + 2]) % 4 for i in range(w * h)
+        )
+        gif = encode_gif(w, h, list(GIF_PALETTE), idx)
+        yield _media_row(int(row["asset_id"]), gif, "image", "gif", w, h)
 
-    return df.mapInPandas(tx, schema=MEDIA_SCHEMA)
+    return _map_records(df, MEDIA_SCHEMA, tx)
 
 
 # --- EXIF / TIFF metadata (APP1) ---------------------------------------
@@ -2142,44 +1941,32 @@ def exif_stats_from_ids(df: DataFrame, id_column: str) -> DataFrame:
     make 'cam-'||id%4. Arrow-batched linear pass, no shuffle — the
     metadata-harvest step a 100-TB image ingest runs before any
     decode."""
-    cols = [f.name for f in EXIF_STATS_SCHEMA.fields]
+    def build(aid: int):
+        w, h = (aid % 7 + 1) * 160, (aid % 5 + 1) * 120
+        dt = f"2024:{aid % 12 + 1:02d}:{aid % 28 + 1:02d} 00:00:00"
+        app1 = encode_exif_app1(
+            [
+                (EXIF_TAG_WIDTH, EXIF_TYPE_SHORT, w),
+                (EXIF_TAG_HEIGHT, EXIF_TYPE_SHORT, h),
+                (EXIF_TAG_ORIENTATION, EXIF_TYPE_SHORT, aid % 8 + 1),
+                (EXIF_TAG_DATETIME, EXIF_TYPE_ASCII, dt),
+                (EXIF_TAG_MAKE, EXIF_TYPE_ASCII, f"cam-{aid % 4}"),
+            ]
+        )
+        shell = encode_jpeg_shell(w, h)
+        content = shell[:2] + app1 + shell[2:]
+        # decode side: everything below reads ONLY `content`
+        tags = parse_exif(content) or {}
+        yield {
+            "asset_id": aid,
+            "width": tags.get(EXIF_TAG_WIDTH),
+            "height": tags.get(EXIF_TAG_HEIGHT),
+            "orientation": tags.get(EXIF_TAG_ORIENTATION),
+            "taken_at": tags.get(EXIF_TAG_DATETIME),
+            "make": tags.get(EXIF_TAG_MAKE),
+        }
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid in pdf[id_column]:
-                aid = int(aid)
-                w, h = (aid % 7 + 1) * 160, (aid % 5 + 1) * 120
-                dt = f"2024:{aid % 12 + 1:02d}:{aid % 28 + 1:02d} 00:00:00"
-                app1 = encode_exif_app1(
-                    [
-                        (EXIF_TAG_WIDTH, EXIF_TYPE_SHORT, w),
-                        (EXIF_TAG_HEIGHT, EXIF_TYPE_SHORT, h),
-                        (EXIF_TAG_ORIENTATION, EXIF_TYPE_SHORT, aid % 8 + 1),
-                        (EXIF_TAG_DATETIME, EXIF_TYPE_ASCII, dt),
-                        (EXIF_TAG_MAKE, EXIF_TYPE_ASCII, f"cam-{aid % 4}"),
-                    ]
-                )
-                shell = encode_jpeg_shell(w, h)
-                content = shell[:2] + app1 + shell[2:]
-                # decode side: everything below reads ONLY `content`
-                tags = parse_exif(content)
-                rec = {
-                    "asset_id": aid, "width": None, "height": None,
-                    "orientation": None, "taken_at": None, "make": None,
-                }
-                if tags is not None:
-                    rec["width"] = tags.get(EXIF_TAG_WIDTH)
-                    rec["height"] = tags.get(EXIF_TAG_HEIGHT)
-                    rec["orientation"] = tags.get(EXIF_TAG_ORIENTATION)
-                    rec["taken_at"] = tags.get(EXIF_TAG_DATETIME)
-                    rec["make"] = tags.get(EXIF_TAG_MAKE)
-                rows.append(rec)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return _spread_ids(df, id_column).mapInPandas(
-        build, schema=EXIF_STATS_SCHEMA
-    )
+    return _map_records(df, EXIF_STATS_SCHEMA, build, ids=id_column)
 
 
 # --------------------------------------------------------------------------
@@ -2366,55 +2153,39 @@ def audio_meta_from_ids(df: DataFrame, id_column: str) -> DataFrame:
     bits [8,16,24][id%3], total_samples id*1000 + id%7. Columns not
     carried by a container are NULL. Arrow-batched linear pass, no
     shuffle — the pre-decode sharding step of a 100-TB audio ingest."""
-    cols = [f.name for f in AUDIO_META_SCHEMA.fields]
+    def build(aid: int):
+        rec = {"asset_id": aid}
+        if aid % 2 == 0:
+            content = encode_id3v2(
+                [
+                    ("TIT2", f"track-{aid}"),
+                    ("TPE1", f"artist-{aid % 6}"),
+                    ("TYER", str(2000 + aid % 25)),
+                ]
+            ) + b"\xff\xfb" + b"\x00" * 32  # fake MPEG frame data
+            # decode side: everything below reads ONLY `content`
+            tags = parse_id3v2(content)
+            if tags is not None:
+                y = tags.get("TYER")
+                rec.update(
+                    container="id3",
+                    title=tags.get("TIT2"),
+                    artist=tags.get("TPE1"),
+                    year=int(y) if y and y.isdigit() else None,
+                )
+        else:
+            content = encode_flac_streaminfo(
+                _FLAC_RATES[aid % 5],
+                aid % 4 + 1,
+                _FLAC_BITS[aid % 3],
+                aid * 1000 + aid % 7,
+            )
+            info = parse_flac_streaminfo(content)
+            if info is not None:
+                rec.update(info, container="flac")
+        yield rec
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid in pdf[id_column]:
-                aid = int(aid)
-                rec = {
-                    "asset_id": aid, "container": None, "title": None,
-                    "artist": None, "year": None, "sample_rate": None,
-                    "channels": None, "bits_per_sample": None,
-                    "total_samples": None,
-                }
-                if aid % 2 == 0:
-                    content = encode_id3v2(
-                        [
-                            ("TIT2", f"track-{aid}"),
-                            ("TPE1", f"artist-{aid % 6}"),
-                            ("TYER", str(2000 + aid % 25)),
-                        ]
-                    ) + b"\xff\xfb" + b"\x00" * 32  # fake MPEG frame data
-                    # decode side: everything below reads ONLY `content`
-                    tags = parse_id3v2(content)
-                    if tags is not None:
-                        rec["container"] = "id3"
-                        rec["title"] = tags.get("TIT2")
-                        rec["artist"] = tags.get("TPE1")
-                        y = tags.get("TYER")
-                        rec["year"] = int(y) if y and y.isdigit() else None
-                else:
-                    content = encode_flac_streaminfo(
-                        _FLAC_RATES[aid % 5],
-                        aid % 4 + 1,
-                        _FLAC_BITS[aid % 3],
-                        aid * 1000 + aid % 7,
-                    )
-                    info = parse_flac_streaminfo(content)
-                    if info is not None:
-                        rec["container"] = "flac"
-                        rec["sample_rate"] = info["sample_rate"]
-                        rec["channels"] = info["channels"]
-                        rec["bits_per_sample"] = info["bits_per_sample"]
-                        rec["total_samples"] = info["total_samples"]
-                rows.append(rec)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return _spread_ids(df, id_column).mapInPandas(
-        build, schema=AUDIO_META_SCHEMA
-    )
+    return _map_records(df, AUDIO_META_SCHEMA, build, ids=id_column)
 
 
 # --------------------------------------------------------------------------
@@ -2513,41 +2284,21 @@ def srt_stats_from_ids(df: DataFrame, id_column: str) -> DataFrame:
     arithmetic: n_cues = id%3+1, total = 1500·n_cues, first_text =
     'line-id-1', last_end = id·1000 + n_cues·2000 + 1500. Arrow-batched
     linear pass, no shuffle."""
-    cols = [f.name for f in SRT_STATS_SCHEMA.fields]
+    def build(aid: int):
+        cues = [
+            (
+                aid * 1000 + k * 2000,
+                aid * 1000 + k * 2000 + 1500,
+                f"line-{aid}-{k}",
+            )
+            for k in range(1, aid % 3 + 2)
+        ]
+        content = encode_srt(cues)
+        # decode side: everything below reads ONLY `content`
+        info = parse_srt(content)
+        yield {**(info or {}), "asset_id": aid}
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid in pdf[id_column]:
-                aid = int(aid)
-                n = aid % 3 + 1
-                cues = [
-                    (
-                        aid * 1000 + k * 2000,
-                        aid * 1000 + k * 2000 + 1500,
-                        f"line-{aid}-{k}",
-                    )
-                    for k in range(1, n + 1)
-                ]
-                content = encode_srt(cues)
-                # decode side: everything below reads ONLY `content`
-                info = parse_srt(content)
-                rec = {
-                    "asset_id": aid, "n_cues": None, "total_ms": None,
-                    "first_text": None, "last_end_ms": None,
-                }
-                if info is not None:
-                    rec.update(
-                        n_cues=info["n_cues"], total_ms=info["total_ms"],
-                        first_text=info["first_text"],
-                        last_end_ms=info["last_end_ms"],
-                    )
-                rows.append(rec)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return _spread_ids(df, id_column).mapInPandas(
-        build, schema=SRT_STATS_SCHEMA
-    )
+    return _map_records(df, SRT_STATS_SCHEMA, build, ids=id_column)
 
 
 # ---------------------------------------------------------------- tar / ustar
@@ -2674,6 +2425,25 @@ def tar_shards_from_docs(
     caller sizes ``num_shards`` so a shard fits a task (the same
     contract real shard writers have). Nothing passes through the
     driver."""
+    return _write_shards(df, id_column, text_column, num_shards, encode_ustar)
+
+
+def tar_members_table(df: DataFrame) -> DataFrame:
+    """Shard READER: explode (shard_id, content) tar archives into one
+    row per member via Arrow-batched mapInPandas — the ingest half of
+    the WebDataset path. Malformed archives yield a single row with
+    NULL name/size/payload so corruption is visible downstream, not
+    silently dropped."""
+    return _read_members(df, TAR_MEMBER_SCHEMA, parse_tar_members)
+
+
+def _write_shards(
+    df: DataFrame, id_column: str, text_column: str, num_shards: int, encode
+) -> DataFrame:
+    """The shard writer behind tar/zip_shards_from_docs: one groupBy on
+    ``id % num_shards``; each group's docs, sorted by id, become
+    ``(zero-padded id + '.txt', utf-8 text)`` members (NULL text packs
+    as empty) and ``encode(members)`` is that shard's content."""
     if num_shards < 1:
         raise ValueError("num_shards must be >= 1")
 
@@ -2686,7 +2456,7 @@ def tar_shards_from_docs(
         return pd.DataFrame(
             {
                 "shard_id": [int(pdf["_shard"].iloc[0])],
-                "content": [encode_ustar(members)],
+                "content": [encode(members)],
             }
         )
 
@@ -2700,38 +2470,20 @@ def tar_shards_from_docs(
     )
 
 
-def tar_members_table(df: DataFrame) -> DataFrame:
-    """Shard READER: explode (shard_id, content) tar archives into one
-    row per member via Arrow-batched mapInPandas — the ingest half of
-    the WebDataset path. Malformed archives yield a single row with
-    NULL name/size/payload so corruption is visible downstream, not
-    silently dropped."""
+def _read_members(df: DataFrame, schema: StructType, parse) -> DataFrame:
+    """The shard reader behind tar/zip_members_table: one row per
+    member ``parse`` finds in each (shard_id, content) archive; a NULL
+    or malformed archive yields one NULL-member row, and a NULL
+    shard_id stays NULL."""
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in TAR_MEMBER_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                sid = int(row["shard_id"])
-                members = (
-                    None
-                    if row["content"] is None
-                    else parse_tar_members(bytes(row["content"]))
-                )
-                if members is None:
-                    rows.append(
-                        {"shard_id": sid, "name": None, "size": None,
-                         "payload": None}
-                    )
-                    continue
-                for m in members:
-                    rows.append(
-                        {"shard_id": sid, "name": m["name"],
-                         "size": m["size"], "payload": m["payload"]}
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def walk(row: dict):
+        sid = None if pd.isna(row["shard_id"]) else int(row["shard_id"])
+        content = row["content"]
+        members = None if content is None else parse(bytes(content))
+        for m in [{}] if members is None else members:
+            yield {**m, "shard_id": sid}
 
-    return df.mapInPandas(walk, schema=TAR_MEMBER_SCHEMA)
+    return _map_records(df, schema, walk)
 
 
 # ------------------------------------------------------------------- zip
@@ -2894,34 +2646,14 @@ def zip_shards_from_docs(
     shard key, each task builds one shard, nothing passes through the
     driver; member names are the zero-padded doc id + ``.txt`` sorted
     by id, so shard bytes are layout-independent."""
-    if num_shards < 1:
-        raise ValueError("num_shards must be >= 1")
     if method not in ("stored", "deflate"):
         raise ValueError(f"method must be stored|deflate, got {method!r}")
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_id")
-        members = [
-            (
-                f"{int(i):012d}.txt",
-                ("" if t is None else str(t)).encode("utf-8"),
-            )
-            for i, t in zip(pdf["_id"], pdf["_text"])
-        ]
-        return pd.DataFrame(
-            {
-                "shard_id": [int(pdf["_shard"].iloc[0])],
-                "content": [encode_zip(members, method=method)],
-            }
-        )
-
-    staged = df.select(
-        F.col(id_column).cast("long").alias("_id"),
-        F.col(text_column).alias("_text"),
-        (F.col(id_column) % num_shards).cast("int").alias("_shard"),
-    )
-    return staged.groupBy("_shard").applyInPandas(
-        build, schema=TAR_SHARD_SCHEMA
+    return _write_shards(
+        df,
+        id_column,
+        text_column,
+        num_shards,
+        lambda members: encode_zip(members, method=method),
     )
 
 
@@ -2930,30 +2662,4 @@ def zip_members_table(df: DataFrame) -> DataFrame:
     row per member with CRC-32 re-verified per member (the
     tar_members_table contract); malformed archives yield one
     NULL-member row so corruption is visible, not dropped."""
-
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in ZIP_MEMBER_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                sid = int(row["shard_id"])
-                members = (
-                    None
-                    if row["content"] is None
-                    else parse_zip_members(bytes(row["content"]))
-                )
-                if members is None:
-                    rows.append(
-                        {"shard_id": sid, "name": None, "size": None,
-                         "method": None, "payload": None}
-                    )
-                    continue
-                for m in members:
-                    rows.append(
-                        {"shard_id": sid, "name": m["name"],
-                         "size": m["size"], "method": m["method"],
-                         "payload": m["payload"]}
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(walk, schema=ZIP_MEMBER_SCHEMA)
+    return _read_members(df, ZIP_MEMBER_SCHEMA, parse_zip_members)

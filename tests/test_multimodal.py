@@ -1109,3 +1109,252 @@ def test_png_adam7_interlace_roundtrip_matches_progressive():
         pos = pos + 12 + length
     cut = big[: pos + 8 + length - 3]  # drop the IDAT tail + CRC
     assert parse_png(cut) is None
+
+
+_MEDIA_COLS = [
+    ("asset_id", "bigint", False),
+    ("content", "binary", True),
+    ("meta", "struct<media_type:string,format:string,width:int,height:int,"
+     "n_frames:int,sample_rate:int>", True),
+]
+_PIXEL_STATS_COLS = [
+    ("asset_id", "bigint", False), ("width", "int", True),
+    ("height", "int", True), ("mean_r", "double", True),
+    ("mean_g", "double", True), ("mean_b", "double", True),
+]
+
+# Output schema of every per-asset function, as (name, simpleString,
+# nullable) triples.
+_LANE_SCHEMAS = {
+    "audio_meta_from_ids": [
+        ("asset_id", "bigint", False), ("container", "string", True),
+        ("title", "string", True), ("artist", "string", True),
+        ("year", "int", True), ("sample_rate", "int", True),
+        ("channels", "int", True), ("bits_per_sample", "int", True),
+        ("total_samples", "bigint", True),
+    ],
+    "chunk_audio": [
+        ("asset_id", "bigint", False), ("chunk_index", "int", False),
+        ("start_sample", "bigint", False), ("n_samples", "int", False),
+        ("chunk_hash", "string", True),
+    ],
+    "codec_assets_from_ids": _MEDIA_COLS,
+    "decode_media": [
+        ("asset_id", "bigint", False), ("content_hash", "string", True),
+        ("n_bytes", "bigint", True), ("width", "int", True),
+        ("height", "int", True), ("sample_rate", "int", True),
+        ("n_samples", "bigint", True),
+    ],
+    "exif_stats_from_ids": [
+        ("asset_id", "bigint", False), ("width", "int", True),
+        ("height", "int", True), ("orientation", "int", True),
+        ("taken_at", "string", True), ("make", "string", True),
+    ],
+    "extract_features": [
+        ("asset_id", "bigint", False), ("feature", "string", False),
+        ("value", "double", True),
+    ],
+    "gif_assets_from_ids": _MEDIA_COLS,
+    "gif_pixel_stats": [
+        ("asset_id", "bigint", False), ("width", "int", True),
+        ("height", "int", True), ("n_pixels", "int", True),
+        ("mean_index", "double", True), ("count_c0", "int", True),
+    ],
+    "jpeg_assets_from_ids": _MEDIA_COLS,
+    "jpeg_pixel_stats": _PIXEL_STATS_COLS,
+    "mjpeg_frame_stats_from_ids": [
+        ("asset_id", "bigint", False), ("frame_index", "bigint", False),
+        ("width", "int", True), ("height", "int", True),
+        ("mean_r", "double", True), ("mean_g", "double", True),
+        ("mean_b", "double", True),
+    ],
+    "mp4_sample_stats_from_ids": [
+        ("asset_id", "bigint", False), ("n_samples", "bigint", True),
+        ("total_sample_bytes", "bigint", True),
+        ("max_sample_bytes", "bigint", True),
+        ("chunk_offset", "bigint", True), ("first_byte_sum", "bigint", True),
+        ("n_bytes", "bigint", False),
+    ],
+    "png_assets_from_ids": _MEDIA_COLS,
+    "png_pixel_stats": _PIXEL_STATS_COLS,
+    "probe_media_from_ids": [
+        ("asset_id", "bigint", False), ("kind", "string", False),
+        ("width", "bigint", True), ("height", "bigint", True),
+        ("n_components", "bigint", True), ("duration_ms", "bigint", True),
+        ("n_bytes", "bigint", False),
+    ],
+    "resize_images": _MEDIA_COLS,
+    "sample_frames": [
+        ("asset_id", "bigint", False), ("frame_index", "int", False),
+        ("frame_hash", "string", True),
+    ],
+    "srt_stats_from_ids": [
+        ("asset_id", "bigint", False), ("n_cues", "int", True),
+        ("total_ms", "bigint", True), ("first_text", "string", True),
+        ("last_end_ms", "bigint", True),
+    ],
+    "tar_members_table": [
+        ("shard_id", "int", True), ("name", "string", True),
+        ("size", "bigint", True), ("payload", "binary", True),
+    ],
+    "transcode_png_to_gif": _MEDIA_COLS,
+    "wav_assets_from_ids": _MEDIA_COLS,
+    "wav_audio_stats": [
+        ("asset_id", "bigint", False), ("n_samples", "bigint", True),
+        ("mean_abs", "double", True), ("peak", "bigint", True),
+        ("zero_crossings", "bigint", True),
+    ],
+    "wav_dft_features": [
+        ("asset_id", "bigint", False), ("bin", "int", False),
+        ("n_samples", "int", False), ("magnitude", "double", True),
+    ],
+    "zip_members_table": [
+        ("shard_id", "int", True), ("name", "string", True),
+        ("size", "bigint", True), ("method", "int", True),
+        ("payload", "binary", True),
+    ],
+}
+
+# Rows each content-reading function returns for one asset with NULL
+# content (JSON with explicit nulls). Functions absent here return no
+# row: gif_pixel_stats, wav_dft_features, transcode_png_to_gif and
+# extract_features skip an asset they cannot read.
+_NULL_CONTENT_ROWS = [
+    ("chunk_audio", '{"asset_id":8,"chunk_index":0,"start_sample":0,'
+     '"n_samples":2,"chunk_hash":"7dea362b3fac8e00956a4952a3d4f474"}'),
+    ("chunk_audio", '{"asset_id":8,"chunk_index":1,"start_sample":2,'
+     '"n_samples":1,"chunk_hash":"e675cc21c1f78217cf5d6a5b1929afde"}'),
+    ("decode_media", '{"asset_id":7,"content_hash":null,"n_bytes":null,'
+     '"width":null,"height":null,"sample_rate":null,"n_samples":null}'),
+    ("jpeg_pixel_stats", '{"asset_id":7,"width":null,"height":null,'
+     '"mean_r":null,"mean_g":null,"mean_b":null}'),
+    ("png_pixel_stats", '{"asset_id":7,"width":null,"height":null,'
+     '"mean_r":null,"mean_g":null,"mean_b":null}'),
+    ("resize_images", '{"asset_id":7,"content":null,"meta":{"media_type":'
+     '"video","format":"mp4","width":3,"height":2,"n_frames":3,'
+     '"sample_rate":null}}'),
+    ("sample_frames", '{"asset_id":7,"frame_index":0,'
+     '"frame_hash":"f1d3ff8443297732862df21dc4e57262"}'),
+    ("sample_frames", '{"asset_id":7,"frame_index":2,'
+     '"frame_hash":"f11177d2ec63d995fb4ac628e0d782df"}'),
+    ("tar_members_table",
+     '{"shard_id":3,"name":null,"size":null,"payload":null}'),
+    ("wav_audio_stats", '{"asset_id":7,"n_samples":null,"mean_abs":null,'
+     '"peak":null,"zero_crossings":null}'),
+    ("zip_members_table", '{"shard_id":3,"name":null,"size":null,'
+     '"method":null,"payload":null}'),
+]
+
+
+def test_per_asset_functions_pin_schema_empty_and_null_content(spark):
+    """Every per-asset mapInPandas function: its output schema, no rows
+    for an empty input, and (for the content readers) the rows for one
+    asset whose content is NULL. All 37 frames are unioned as JSON and
+    collected in one action."""
+    from pyspark.sql import functions as F
+
+    from paqarin_spark import multimodal as mm
+
+    empty_media = mm.media_table(spark, [])
+    video = mm.media_table(spark, [(7, None, ("video", "mp4", 4, 2, 3, None))])
+    audio = mm.media_table(spark, [(8, None, ("audio", "wav", None, None, 3, 2))])
+    content_fns = {
+        "decode_media": mm.decode_media,
+        "png_pixel_stats": mm.png_pixel_stats,
+        "extract_features": mm.extract_features,
+        "resize_images": lambda d: mm.resize_images(d, 3, 2),
+        "sample_frames": mm.sample_frames,
+        "chunk_audio": mm.chunk_audio,
+        "jpeg_pixel_stats": mm.jpeg_pixel_stats,
+        "wav_audio_stats": mm.wav_audio_stats,
+        "wav_dft_features": mm.wav_dft_features,
+        "gif_pixel_stats": mm.gif_pixel_stats,
+        "transcode_png_to_gif": mm.transcode_png_to_gif,
+    }
+    frames = []
+    for name, fn in content_fns.items():
+        one = audio if name == "chunk_audio" else video
+        frames += [(name, "empty", fn(empty_media)), (name, "null", fn(one))]
+    empty_ids = spark.createDataFrame([], "id long")
+    id_fns = sorted(n for n in dir(mm) if n.endswith("_from_ids"))
+    assert len(id_fns) == 11
+    frames += [(n, "empty", getattr(mm, n)(empty_ids, "id")) for n in id_fns]
+    empty_shards = spark.createDataFrame([], mm.TAR_SHARD_SCHEMA)
+    null_shard = spark.createDataFrame([(3, None)], mm.TAR_SHARD_SCHEMA)
+    for name in ("tar_members_table", "zip_members_table"):
+        fn = getattr(mm, name)
+        frames += [(name, "empty", fn(empty_shards)), (name, "null", fn(null_shard))]
+
+    schemas = {
+        name: [(f.name, f.dataType.simpleString(), f.nullable)
+               for f in df.schema.fields]
+        for name, _, df in frames
+    }
+    assert schemas == _LANE_SCHEMAS
+
+    union = None
+    for name, kind, df in frames:
+        j = df.select(
+            F.lit(name).alias("fn"),
+            F.lit(kind).alias("kind"),
+            F.to_json(F.struct("*"), {"ignoreNullFields": "false"}).alias("row"),
+        )
+        union = j if union is None else union.unionByName(j)
+    got = sorted((r.fn, r.kind, r.row) for r in union.collect())
+    assert [g for g in got if g[1] == "empty"] == []
+    assert [(fn, row) for fn, _, row in got] == _NULL_CONTENT_ROWS
+
+
+def test_member_readers_pass_null_shard_id_through(spark):
+    """A (NULL, NULL) shard row next to real shards reads as one
+    NULL-member row with a NULL shard_id; the real shards still read."""
+    from paqarin_spark.multimodal import (
+        TAR_SHARD_SCHEMA,
+        tar_members_table,
+        tar_shards_from_docs,
+        zip_members_table,
+        zip_shards_from_docs,
+    )
+
+    docs = spark.createDataFrame(
+        [(0, "alpha"), (1, "beta")], "doc_id long, text string"
+    )
+    poison = spark.createDataFrame([(None, None)], TAR_SHARD_SCHEMA)
+    for write, read in (
+        (tar_shards_from_docs, tar_members_table),
+        (zip_shards_from_docs, zip_members_table),
+    ):
+        shards = write(docs, "doc_id", "text", num_shards=2).unionByName(poison)
+        got = sorted(
+            (r["shard_id"] is None, r["shard_id"] or 0, r["name"] or "")
+            for r in read(shards).collect()
+        )
+        assert got == [
+            (False, 0, "000000000000.txt"),
+            (False, 1, "000000000001.txt"),
+            (True, 0, ""),
+        ]
+
+
+def test_extract_features_rejects_dim_outside_digest(spark):
+    """Feature values index a 32-byte sha256 digest, so ``dim`` must be
+    in 1..32; the check runs at call time, not in a worker."""
+    from paqarin_spark.multimodal import extract_features, media_table
+
+    df = media_table(spark, [])
+    for dim in (0, -1, 33, 40):
+        with pytest.raises(ValueError, match="dim"):
+            extract_features(df, dim=dim)
+    extract_features(df, dim=32)
+
+
+def test_sample_frames_rejects_every_nth_below_one(spark):
+    """``every_nth`` is a range step: 0 used to fail in the worker and
+    a negative step returned no frames. Both now raise at call time."""
+    from paqarin_spark.multimodal import media_table
+
+    df = media_table(spark, [])
+    for every_nth in (0, -1):
+        with pytest.raises(ValueError, match="every_nth"):
+            sample_frames(df, every_nth=every_nth)
+    sample_frames(df, every_nth=1)

@@ -47,3 +47,20 @@ def test_staging_dir_lives_under_tempdir_and_sweeps_dead_pids(
     assert path == q._staging_dir(prefix, "/data/sf0.001")
     assert not dead.exists()
     assert mine.exists()
+
+
+def test_check_oracle_refuses_unknown_query_names():
+    """A query name outside the registry fails the gate before any
+    Spark session starts, instead of checking nothing and passing."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    done = subprocess.run(
+        [sys.executable, os.path.join(root, "tools", "check_oracle.py"),
+         tempfile.gettempdir(), "mm1_media_decode", "mm99_no_such_query"],
+        capture_output=True, text=True, timeout=120,
+    )
+    assert done.returncode != 0
+    assert "mm99_no_such_query" in done.stdout
+    assert "all green" not in done.stdout

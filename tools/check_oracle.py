@@ -41,6 +41,11 @@ def canonical(df: pd.DataFrame) -> str:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    queries = entrymod.queries()
+    unknown = sorted(only - set(queries))
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        return 2
 
     spark = get_session("oracle-check")
     con = duckdb.connect()
@@ -49,7 +54,6 @@ def main() -> int:
         if os.path.exists(path):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
 
-    queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
     for name, fn in queries.items():
