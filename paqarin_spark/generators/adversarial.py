@@ -15,39 +15,27 @@ averaging them (pinned by tests: on a bimodal window population the
 GAN covers both modes while an MSE head trained on the same
 noise→window task collapses to the mean).
 
-Physical placement is the ARNet/GRUNet boundary exactly (neural.py
-module doc): scaling/windowing/subsampling/rollout distributed;
-training one Arrow batch over the md5-rank-bounded window sample; only
-the weight state crosses the boundary (one JSON row). Determinism: md5
-Glorot init, md5 noise keyed (seed, epoch, i, j), SORTED batch,
-full-batch alternating steps, fixed epochs — weights are a pure
-function of (data, seed), layout-independent. Sampling is
-UNCONDITIONAL (z → window), so generate() needs no start pool — the
-whole rollout is one embarrassingly parallel mapInPandas pass.
+Placement and determinism are the shared windowed lifecycle
+(generators/windowed.py), plus md5 noise keyed (seed, epoch, i, j)
+and full-batch alternating steps. Sampling is UNCONDITIONAL
+(z → window), so generate() needs no start pool — the whole rollout
+is one embarrassingly parallel mapInPandas pass over a range of ids.
 """
 
 from __future__ import annotations
 
 import json
-import os
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+import numpy as np
 
-from paqarin_spark.generator import (
-    GeneratorParameters,
-    TimeSeriesGenerator,
-    _read_params,
-    _write_params,
-)
-from paqarin_spark.operators.resample import parse_timestamps
-from paqarin_spark.operators.scaling import MinMaxScaler, MinMaxState
-from paqarin_spark.operators.windows import SEQUENCE, SEQUENCE_ID, sliding_windows
+from paqarin_spark.generator import GeneratorParameters
+from paqarin_spark.generators import nn
+from paqarin_spark.generators.windowed import _window_array, _WindowedGenerator
 
 
-class GANWindowGenerator(TimeSeriesGenerator):
-    provider = "paqarin_spark"
+class GANWindowGenerator(_WindowedGenerator):
     method = "gan"
+    keeps_starts = False
 
     def __init__(
         self,
@@ -60,64 +48,23 @@ class GANWindowGenerator(TimeSeriesGenerator):
         lr_d: float = 0.5,
         max_windows: int = 256,
     ):
-        super().__init__(parameters)
+        super().__init__(parameters, max_windows)
         self.noise_dim = int(noise_dim)
         self.hidden_g = int(hidden_g)
         self.hidden_d = int(hidden_d)
         self.epochs = int(epochs)
         self.lr_g = float(lr_g)
         self.lr_d = float(lr_d)
-        self.max_windows = int(max_windows)
-        self.scaler = MinMaxScaler(list(parameters.schema.value_columns))
-        self.weights: dict | None = None  # {"g": [...], "d": [...]}
 
-    @property
-    def is_fitted(self) -> bool:
-        return self.weights is not None
-
-    def fit(self, training_data: DataFrame) -> "GANWindowGenerator":
-        schema = self.parameters.schema
-        cols = list(schema.value_columns)
-        if not cols:
-            raise ValueError("schema has no value columns")
-        L = self.parameters.sequence_length
-        seed = self.parameters.seed
+    def _train_body(self, cols, L):
         nz, hg, hd = self.noise_dim, self.hidden_g, self.hidden_d
         epochs, lr_g, lr_d = self.epochs, self.lr_g, self.lr_d
+        seed = self.parameters.seed
 
-        parsed = parse_timestamps(training_data, schema)
-        if not self.scaler.is_fitted:
-            self.scaler.fit(parsed)
-        scaled = self.scaler.transform(parsed)
-        windows = sliding_windows(scaled, schema, L).select(
-            F.concat_ws(
-                "|", *[F.col(c).cast("string") for c in schema.ids], SEQUENCE_ID
-            ).alias("_window_key"),
-            F.col(SEQUENCE),
-        )
-        ranked = windows.withColumn(
-            "_r",
-            F.md5(F.concat_ws("#", F.col("_window_key"), F.lit(f"gan{seed}"))),
-        )
-        sample = ranked.orderBy("_r").limit(self.max_windows)
-
-        def train(pdf):
-            import numpy as np
-            import pandas as pd
-
-            from paqarin_spark.generators import nn
-
-            pdf = pdf.sort_values("_window_key")
-            seqs = np.array(
-                [
-                    [[rec[c] for c in cols] for rec in seq]
-                    for seq in pdf[SEQUENCE]
-                ],
-                dtype=np.float64,
-            )
-            flat = seqs.reshape(seqs.shape[0], -1)
+        def body(pdf):
+            seqs = _window_array(pdf, cols)
             g, d, losses = nn.train_gan(
-                flat,
+                seqs.reshape(seqs.shape[0], -1),
                 nz=nz,
                 hidden_g=hg,
                 hidden_d=hd,
@@ -126,127 +73,29 @@ class GANWindowGenerator(TimeSeriesGenerator):
                 lr_d=lr_d,
                 seed=seed,
             )
-            state = {
+            return {
                 "g": nn.params_to_lists(g),
                 "d": nn.params_to_lists(d),
                 "d_loss_first": losses[0],
                 "d_loss_last": losses[-1],
             }
-            return pd.DataFrame({"weights": [json.dumps(state)]})
 
-        row = (
-            sample.withColumn("_g", F.lit(0))
-            .groupBy("_g")
-            .applyInPandas(train, schema="weights string")
-            .collect()
-        )
-        if not row:
-            raise ValueError(
-                "cannot fit: no training windows (every entity is "
-                f"shorter than sequence_length={L})"
-            )
-        self.weights = json.loads(row[0]["weights"])
-        return self
+        return body
 
-    def generate(
-        self, number_of_sequences: int, seed: int | None = None
-    ) -> DataFrame:
-        if self.weights is None:
-            raise RuntimeError("generator is not fitted")
-        seed = self.parameters.seed if seed is None else seed
-        schema = self.parameters.schema
-        cols = list(schema.value_columns)
-        L = self.parameters.sequence_length
-        nz = self.noise_dim
-        g_json = json.dumps(self.weights["g"])
-        ranges = {c: self.scaler.state.column_range[c] for c in cols}
-        spark = SparkSession.getActiveSession()
-        seeds = spark.range(number_of_sequences).select(
-            F.col("id").alias(SEQUENCE_ID)
-        )
+    def _rollout_body(self, n_cols, L, seed):
+        g_json, nz = json.dumps(self.weights["g"]), self.noise_dim
 
-        def rollout(batches):
-            import numpy as np
-            import pandas as pd
-
-            from paqarin_spark.generators import nn
-
+        def make():
             g = nn.params_from_lists(json.loads(g_json))
-            for pdf in batches:
-                out_rows = []
-                for sid in pdf[SEQUENCE_ID]:
-                    z = np.array(
-                        [
-                            [
-                                2.0
-                                * nn._md5_unit(f"gan-gen#{seed}#{sid}#{j}")
-                                - 1.0
-                                for j in range(nz)
-                            ]
-                        ],
-                        dtype=np.float64,
-                    )
-                    win = nn.gan_sample(g, z)[0].reshape(L, len(cols))
-                    out_rows.append(
-                        {
-                            SEQUENCE_ID: int(sid),
-                            SEQUENCE: [
-                                {
-                                    c: float(win[t, j])
-                                    * (ranges[c][1] - ranges[c][0])
-                                    + ranges[c][0]
-                                    for j, c in enumerate(cols)
-                                }
-                                for t in range(L)
-                            ],
-                        }
-                    )
-                yield pd.DataFrame(out_rows, columns=[SEQUENCE_ID, SEQUENCE])
 
-        struct = ", ".join(f"{c}: double" for c in cols)
-        return seeds.mapInPandas(
-            rollout,
-            schema=f"{SEQUENCE_ID} long, {SEQUENCE} array<struct<{struct}>>",
-        )
+            def sequence(sid, ctx):
+                z = [
+                    2.0 * nn._md5_unit(f"gan-gen#{seed}#{sid}#{j}") - 1.0
+                    for j in range(nz)
+                ]
+                win = nn.gan_sample(g, np.array([z], dtype=np.float64))[0]
+                return win.reshape(L, n_cols).tolist()
 
-    def save(self, path: str) -> None:
-        if self.weights is None:
-            raise RuntimeError("generator is not fitted")
-        spark = SparkSession.getActiveSession()
-        _write_params(
-            path,
-            self.parameters,
-            {
-                "provider": self.provider,
-                "method": self.method,
-                "noise_dim": self.noise_dim,
-                "hidden_g": self.hidden_g,
-                "hidden_d": self.hidden_d,
-                "epochs": self.epochs,
-                "lr_g": self.lr_g,
-                "lr_d": self.lr_d,
-                "max_windows": self.max_windows,
-                "weights": self.weights,
-            },
-            spark=spark,
-        )
-        self.scaler.state.save(os.path.join(path, "scaler.json"), spark=spark)
+            return sequence
 
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "GANWindowGenerator":
-        params, extra = _read_params(path, spark=spark)
-        gen = cls(
-            params,
-            noise_dim=int(extra.get("noise_dim", 3)),
-            hidden_g=int(extra.get("hidden_g", 16)),
-            hidden_d=int(extra.get("hidden_d", 8)),
-            epochs=int(extra.get("epochs", 1500)),
-            lr_g=float(extra.get("lr_g", 1.0)),
-            lr_d=float(extra.get("lr_d", 0.5)),
-            max_windows=int(extra.get("max_windows", 256)),
-        )
-        gen.weights = extra["weights"]
-        gen.scaler.state = MinMaxState.load(
-            os.path.join(path, "scaler.json"), spark=spark
-        )
-        return gen
+        return make

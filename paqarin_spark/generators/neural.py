@@ -6,53 +6,55 @@ Where DeepProviderGenerator carries the reference providers'
 parameter-translation contracts but cannot run them here (TimeGAN /
 DoppleGANger / PAR need TF or torch —
 `paqarin/adapters/ydata_adapter.py:291-358`,
-`synthcity_adapter.py:109-155`), ARNet occupies the SAME lifecycle —
-scale → window → train on the window population → sample → inverse
-scale (`ydata_adapter.py:233-288`) — with a model that genuinely
-fits: nonlinear (tanh hidden layer), trained by full-batch gradient
-descent for a fixed epoch count, reproducible on any cluster layout.
+`synthcity_adapter.py:109-155`), ARNet occupies the SAME lifecycle
+(generators/windowed.py states it, with the placement and determinism
+contract) with a model that genuinely fits: nonlinear (tanh hidden
+layer), trained by full-batch gradient descent for a fixed epoch
+count, reproducible on any cluster layout.
 
-Physical placement mirrors the deep boundary deliberately:
-
-- everything DISTRIBUTED stays distributed — scaling (one global
-  aggregate), windowing (per-entity Spark windows), the
-  deterministic md5-rank subsample, the rollout fan-out
-  (mapInPandas, one independent sequence per row), inverse scaling;
-- TRAINING runs in one Arrow batch over the bounded subsample
-  (``max_windows``, default 512) inside ``applyInPandas`` — the
-  single-node model boundary every deep provider has, made explicit
-  and bounded; only the weight vector crosses back (one JSON row,
-  never row data).
-
-Determinism: the subsample is an md5 rank (layout-independent), the
-batch is SORTED by window key before training, gradients are
-full-batch sums, init is md5-derived — so the fitted weights, and
-therefore every generated sequence, are a pure function of
-(data, parameters.seed). Rollout noise is optional md5 Box–Muller
-(off by default).
+Training is parameter-averaged (local SGD / FedAvg): the window sample
+is sharded by a CONTENT hash of the window key (not partition layout),
+each shard trains locally from the current global weights for
+``epochs // rounds`` full-batch steps (momentum restarts each round),
+the shard weights are averaged by example count, and this repeats for
+``rounds`` rounds — at any shard count, including the default single
+shard. Per round the driver sees ≤ ``shards`` weight rows (never
+window data) — the communication pattern that trains one model across
+a 1000-executor cluster when the window population no longer fits one
+Arrow batch. The reference trains its providers single-node on one
+host (ydata_adapter.py:291-358); this is the cluster-shaped
+counterpart for the in-env numpy model.
 """
 
 from __future__ import annotations
 
+import functools
 import json
-import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+import numpy as np
 
-from paqarin_spark.generator import (
-    GeneratorParameters,
-    TimeSeriesGenerator,
-    _read_params,
-    _write_params,
+from paqarin_spark.generator import GeneratorParameters
+from paqarin_spark.generators import nn
+from paqarin_spark.generators.windowed import (
+    _add_noise,
+    _window_array,
+    _WindowedGenerator,
 )
-from paqarin_spark.operators.resample import parse_timestamps
-from paqarin_spark.operators.scaling import MinMaxScaler, MinMaxState
-from paqarin_spark.operators.windows import SEQUENCE, SEQUENCE_ID, sliding_windows
 
 
-class ARNetGenerator(TimeSeriesGenerator):
-    provider = "paqarin_spark"
+def _local_train(pdf, cols, hidden, epochs, lr, seed, start):
+    """One shard's local steps from the round's global weights."""
+    seqs = _window_array(pdf, cols)
+    L = seqs.shape[1]
+    x = seqs[:, : L - 1, :].reshape(len(seqs), -1)
+    trained = nn.train_mlp(
+        x, seqs[:, L - 1, :], hidden=hidden, epochs=epochs, lr=lr, seed=seed,
+        params=json.loads(start),
+    )
+    return nn.params_to_lists(trained)
+
+
+class ARNetGenerator(_WindowedGenerator):
     method = "arnet"
 
     def __init__(
@@ -66,332 +68,53 @@ class ARNetGenerator(TimeSeriesGenerator):
         shards: int = 1,
         rounds: int = 1,
     ):
-        super().__init__(parameters)
+        super().__init__(parameters, max_windows)
         self.hidden = int(hidden)
         self.epochs = int(epochs)
         self.learning_rate = float(learning_rate)
-        self.max_windows = int(max_windows)
         self.noise = float(noise)
         if int(shards) < 1 or int(rounds) < 1:
             raise ValueError("shards and rounds must be >= 1")
         self.shards = int(shards)
         self.rounds = int(rounds)
-        self.scaler = MinMaxScaler(list(parameters.schema.value_columns))
-        self.weights: list[dict] | None = None  # JSON-able layer list
-        self._starts: DataFrame | None = None  # scaled windows, keyed
-        self._n_starts: int | None = None
 
-    @property
-    def is_fitted(self) -> bool:
-        return self.weights is not None
-
-    def fit(self, training_data: DataFrame) -> "ARNetGenerator":
-        schema = self.parameters.schema
-        cols = list(schema.value_columns)
-        L = self.parameters.sequence_length
+    def _train(self, sample, cols, L):
         seed = self.parameters.seed
-        hidden, epochs, lr = self.hidden, self.epochs, self.learning_rate
-
-        parsed = parse_timestamps(training_data, schema)
-        if not self.scaler.is_fitted:
-            self.scaler.fit(parsed)
-        scaled = self.scaler.transform(parsed)
-        windows = sliding_windows(scaled, schema, L).select(
-            F.concat_ws(
-                "|", *[F.col(c).cast("string") for c in schema.ids], SEQUENCE_ID
-            ).alias("_window_key"),
-            F.col(SEQUENCE),
+        params = nn.init_params([(L - 1) * len(cols), self.hidden, len(cols)], seed)
+        body = functools.partial(
+            _local_train,
+            cols=cols,
+            hidden=self.hidden,
+            epochs=max(1, self.epochs // self.rounds),
+            lr=self.learning_rate,
+            seed=seed,
         )
-        # Deterministic bounded subsample (the bootstrap draw): the
-        # training set is the md5-rank top ``max_windows`` windows —
-        # layout-independent, and the single-node training batch is
-        # bounded by construction at any corpus size.
-        ranked = windows.withColumn(
-            "_r",
-            F.md5(F.concat_ws("#", F.col("_window_key"), F.lit(f"arnet{seed}"))),
-        )
-        sample = ranked.orderBy("_r").limit(self.max_windows).persist()
-
-        def _xy(pdf):
-            import numpy as np
-
-            pdf = pdf.sort_values("_window_key")
-            x = np.array(
-                [
-                    [rec[c] for rec in seq[: L - 1] for c in cols]
-                    for seq in pdf[SEQUENCE]
-                ],
-                dtype=np.float64,
+        for _ in range(self.rounds):
+            start = json.dumps(nn.params_to_lists(params))
+            shards = self._train_lane(
+                sample, functools.partial(body, start=start), self.shards
             )
-            y = np.array(
-                [[seq[L - 1][c] for c in cols] for seq in pdf[SEQUENCE]],
-                dtype=np.float64,
+            params = nn.average_params(
+                [(n, nn.params_from_lists(w)) for n, w in shards]
             )
-            return x, y
+        return nn.params_to_lists(params)
 
-        if self.shards == 1:
-            def train(pdf):
-                import pandas as pd
+    def _rollout_body(self, n_cols, L, seed):
+        weights_json, noise, method = json.dumps(self.weights), self.noise, self.method
 
-                from paqarin_spark.generators import nn
-
-                x, y = _xy(pdf)
-                params = nn.train_mlp(
-                    x, y, hidden=hidden, epochs=epochs, lr=lr, seed=seed
-                )
-                return pd.DataFrame(
-                    {"weights": [json.dumps(nn.params_to_lists(params))]}
-                )
-
-            row = (
-                sample.withColumn("_g", F.lit(0))
-                .groupBy("_g")
-                .applyInPandas(train, schema="weights string")
-                .collect()
-            )
-            if not row:
-                sample.unpersist()
-                raise ValueError(
-                    "cannot fit: no training windows (every entity is "
-                    f"shorter than sequence_length={L})"
-                )
-            self.weights = json.loads(row[0]["weights"])
-        else:
-            # Parameter-averaged distributed training (local SGD /
-            # FedAvg): shard the window sample by a CONTENT hash (not
-            # partition layout), train each shard locally from the
-            # current global weights for epochs/rounds full-batch
-            # steps, average the shard weights by example count, and
-            # repeat. Per round the driver sees ≤ shards weight rows
-            # (never window data) — the communication pattern that
-            # trains one model across a 1000-executor cluster when the
-            # window population no longer fits one Arrow batch. The
-            # reference trains its providers single-node on one host
-            # (ydata_adapter.py:291-358); this is the cluster-shaped
-            # counterpart for the in-env numpy model.
-            from paqarin_spark.generators import nn
-
-            if not cols:
-                raise ValueError("schema has no value columns")
-            in_dim = (L - 1) * len(cols)
-            sharded = sample.withColumn(
-                "_shard",
-                F.pmod(
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    F.lit("arnet-shard#"),
-                                    F.col("_window_key"),
-                                )
-                            ),
-                            1,
-                            15,
-                        ),
-                        16,
-                        10,
-                    ).cast("long"),
-                    F.lit(self.shards),
-                ),
-            ).persist()
-            params = nn.init_params([in_dim, hidden, len(cols)], seed)
-            local_epochs = max(1, epochs // self.rounds)
-            def _make_local_train(_cur):
-                # single-arg closure: applyInPandas inspects the arity,
-                # so the round's weight state must NOT ride as a
-                # default arg (two params would read as (key, pdf)).
-                def local_train(pdf):
-                    import pandas as pd
-
-                    from paqarin_spark.generators import nn as _nn
-
-                    x, y = _xy(pdf)
-                    trained = _nn.train_mlp(
-                        x,
-                        y,
-                        hidden=hidden,
-                        epochs=local_epochs,
-                        lr=lr,
-                        seed=seed,
-                        params=json.loads(_cur),
-                    )
-                    return pd.DataFrame(
-                        {
-                            "n": [len(pdf)],
-                            "weights": [
-                                json.dumps(_nn.params_to_lists(trained))
-                            ],
-                        }
-                    )
-
-                return local_train
-
-            for _ in range(self.rounds):
-                local_train = _make_local_train(
-                    json.dumps(nn.params_to_lists(params))
-                )
-                rows = (
-                    sharded.groupBy("_shard")
-                    .applyInPandas(local_train, schema="n long, weights string")
-                    .collect()
-                )
-                if not rows:
-                    sharded.unpersist()
-                    sample.unpersist()
-                    raise ValueError(
-                        "cannot fit: no training windows (every entity is "
-                        f"shorter than sequence_length={L})"
-                    )
-                params = nn.average_params(
-                    [
-                        (int(r["n"]), nn.params_from_lists(json.loads(r["weights"])))
-                        for r in rows
-                    ]
-                )
-            sharded.unpersist()
-            self.weights = nn.params_to_lists(params)
-        self._starts = sample
-        self._n_starts = sample.count()
-        return self
-
-    def unpersist(self) -> None:
-        if self._starts is not None:
-            self._starts.unpersist()
-
-    def generate(self, number_of_sequences: int, seed: int | None = None) -> DataFrame:
-        if self.weights is None or self._starts is None:
-            raise RuntimeError("generator is not fitted")
-        n_starts = getattr(self, "_n_starts", None)
-        if n_starts is not None and number_of_sequences > n_starts:
-            # The rollout pool is the bounded fit-time subsample; a
-            # silent shortfall would skew downstream TSTR scoring
-            # (e.g. number_of_sequences=600 quietly scoring on 512).
-            raise ValueError(
-                f"number_of_sequences={number_of_sequences} exceeds the "
-                f"fitted start pool ({n_starts}); refit with a larger "
-                "max_windows to draw more"
-            )
-        seed = self.parameters.seed if seed is None else seed
-        schema = self.parameters.schema
-        cols = list(schema.value_columns)
-        L = self.parameters.sequence_length
-        weights_json = json.dumps(self.weights)
-        ranges = {c: self.scaler.state.column_range[c] for c in cols}
-        noise = self.noise
-
-        ranked = self._starts.withColumn(
-            "_rs",
-            F.md5(F.concat_ws("#", F.col("_window_key"), F.lit(str(seed)))),
-        )
-        picked = (
-            ranked.orderBy("_rs")
-            .limit(number_of_sequences)
-            .select(
-                (F.row_number().over(Window.orderBy("_rs")) - 1).alias(
-                    SEQUENCE_ID
-                ),
-                SEQUENCE,
-            )
-        )
-
-        def rollout(batches):
-            import numpy as np
-            import pandas as pd
-
-            from paqarin_spark.generators import nn
-            from paqarin_spark.generators.nn import _md5_unit
-
+        def make():
             params = nn.params_from_lists(json.loads(weights_json))
-            for pdf in batches:
-                out_rows = []
-                for sid, seq in zip(pdf[SEQUENCE_ID], pdf[SEQUENCE]):
-                    ctx = [
-                        [rec[c] for c in cols] for rec in seq[: L - 1]
-                    ]  # scaled context window
-                    gen: list[list[float]] = []
-                    for step in range(L):
-                        x = np.array(
-                            [v for row in ctx for v in row], dtype=np.float64
-                        )[None, :]
-                        pred = nn.forward(params, x)[0]
-                        if noise > 0.0:
-                            for j in range(len(cols)):
-                                u1 = max(
-                                    _md5_unit(f"arnet-u1#{sid}#{step}#{j}#{seed}"),
-                                    1e-18,
-                                )
-                                u2 = _md5_unit(f"arnet-u2#{sid}#{step}#{j}#{seed}")
-                                z = (-2.0 * np.log(u1)) ** 0.5 * np.cos(
-                                    2.0 * np.pi * u2
-                                )
-                                pred[j] += noise * z
-                        step_vals = [float(v) for v in pred]
-                        gen.append(step_vals)
-                        ctx = ctx[1:] + [step_vals]
-                    out_rows.append(
-                        {
-                            SEQUENCE_ID: int(sid),
-                            SEQUENCE: [
-                                {
-                                    c: sv[j] * (ranges[c][1] - ranges[c][0])
-                                    + ranges[c][0]
-                                    for j, c in enumerate(cols)
-                                }
-                                for sv in gen
-                            ],
-                        }
-                    )
-                yield pd.DataFrame(out_rows, columns=[SEQUENCE_ID, SEQUENCE])
 
-        struct = ", ".join(f"{c}: double" for c in cols)
-        return picked.mapInPandas(
-            rollout,
-            schema=f"{SEQUENCE_ID} long, {SEQUENCE} array<struct<{struct}>>",
-        )
+            def sequence(sid, ctx):
+                gen = []
+                for step in range(L):
+                    x = np.array([v for row in ctx for v in row], dtype=np.float64)
+                    pred = nn.forward(params, x[None, :])[0]
+                    _add_noise(pred, noise, method, sid, step, seed)
+                    gen.append([float(v) for v in pred])
+                    ctx = ctx[1:] + [gen[-1]]
+                return gen
 
-    def save(self, path: str) -> None:
-        if self.weights is None or self._starts is None:
-            raise RuntimeError("generator is not fitted")
-        spark = self._starts.sparkSession
-        _write_params(
-            path,
-            self.parameters,
-            {
-                "provider": self.provider,
-                "method": self.method,
-                "hidden": self.hidden,
-                "epochs": self.epochs,
-                "learning_rate": self.learning_rate,
-                "max_windows": self.max_windows,
-                "noise": self.noise,
-                "shards": self.shards,
-                "rounds": self.rounds,
-                "weights": self.weights,
-            },
-            spark=spark,
-        )
-        self.scaler.state.save(os.path.join(path, "scaler.json"), spark=spark)
-        self._starts.write.mode("overwrite").parquet(
-            os.path.join(path, "starts.parquet")
-        )
+            return sequence
 
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "ARNetGenerator":
-        params, extra = _read_params(path, spark=spark)
-        gen = cls(
-            params,
-            hidden=int(extra.get("hidden", 16)),
-            epochs=int(extra.get("epochs", 200)),
-            learning_rate=float(extra.get("learning_rate", 0.05)),
-            max_windows=int(extra.get("max_windows", 512)),
-            noise=float(extra.get("noise", 0.0)),
-            shards=int(extra.get("shards", 1)),
-            rounds=int(extra.get("rounds", 1)),
-        )
-        gen.weights = extra["weights"]
-        gen.scaler.state = MinMaxState.load(
-            os.path.join(path, "scaler.json"), spark=spark
-        )
-        gen._starts = spark.read.parquet(os.path.join(path, "starts.parquet"))
-        gen._n_starts = gen._starts.count()
-        return gen
+        return make

@@ -13,36 +13,30 @@ carried across the entire rollout, trained by teacher-forced
 full-batch BPTT over every step of every window (not just the last
 step, which is all ARNet's flattened MLP sees).
 
-Physical placement is the ARNet boundary exactly (neural.py module
-doc): scaling/windowing/subsampling/rollout distributed; training one
-Arrow batch over the md5-rank-bounded window sample; only the weight
-state crosses the boundary (one JSON row). Determinism: md5 Glorot
-init, SORTED batch, full-batch gradients, fixed epochs — weights are
-a pure function of (data, seed), layout-independent
-(tests/test_neural.py pins this and the long-memory win over ARNet).
+Placement and determinism are the shared windowed lifecycle
+(generators/windowed.py): md5 Glorot init, SORTED batch, full-batch
+gradients, fixed epochs — weights are a pure function of (data,
+seed), layout-independent (tests/test_neural.py pins this and the
+long-memory win over ARNet).
 """
 
 from __future__ import annotations
 
 import json
-import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+import numpy as np
+from pyspark.sql import DataFrame
 
-from paqarin_spark.generator import (
-    GeneratorParameters,
-    TimeSeriesGenerator,
-    _read_params,
-    _write_params,
+from paqarin_spark.generator import GeneratorParameters
+from paqarin_spark.generators import nn
+from paqarin_spark.generators.windowed import (
+    _add_noise,
+    _window_array,
+    _WindowedGenerator,
 )
-from paqarin_spark.operators.resample import parse_timestamps
-from paqarin_spark.operators.scaling import MinMaxScaler, MinMaxState
-from paqarin_spark.operators.windows import SEQUENCE, SEQUENCE_ID, sliding_windows
 
 
-class GRUNetGenerator(TimeSeriesGenerator):
-    provider = "paqarin_spark"
+class GRUNetGenerator(_WindowedGenerator):
     method = "grunet"
 
     def __init__(
@@ -54,232 +48,52 @@ class GRUNetGenerator(TimeSeriesGenerator):
         max_windows: int = 512,
         noise: float = 0.0,
     ):
-        super().__init__(parameters)
+        super().__init__(parameters, max_windows)
         self.hidden = int(hidden)
         self.epochs = int(epochs)
         self.learning_rate = float(learning_rate)
-        self.max_windows = int(max_windows)
         self.noise = float(noise)
-        self.scaler = MinMaxScaler(list(parameters.schema.value_columns))
-        self.weights: dict | None = None  # JSON-able gate matrices
-        self._starts: DataFrame | None = None
-        self._n_starts: int | None = None
-
-    @property
-    def is_fitted(self) -> bool:
-        return self.weights is not None
 
     def fit(self, training_data: DataFrame) -> "GRUNetGenerator":
-        schema = self.parameters.schema
-        cols = list(schema.value_columns)
-        if not cols:
-            raise ValueError("schema has no value columns")
-        L = self.parameters.sequence_length
-        if L < 2:
+        if self.parameters.sequence_length < 2:
             raise ValueError("sequence_length must be >= 2 for BPTT")
-        seed = self.parameters.seed
+        return super().fit(training_data)
+
+    def _train_body(self, cols, L):
         hidden, epochs, lr = self.hidden, self.epochs, self.learning_rate
+        seed = self.parameters.seed
 
-        parsed = parse_timestamps(training_data, schema)
-        if not self.scaler.is_fitted:
-            self.scaler.fit(parsed)
-        scaled = self.scaler.transform(parsed)
-        windows = sliding_windows(scaled, schema, L).select(
-            F.concat_ws(
-                "|", *[F.col(c).cast("string") for c in schema.ids], SEQUENCE_ID
-            ).alias("_window_key"),
-            F.col(SEQUENCE),
-        )
-        ranked = windows.withColumn(
-            "_r",
-            F.md5(F.concat_ws("#", F.col("_window_key"), F.lit(f"grunet{seed}"))),
-        )
-        sample = ranked.orderBy("_r").limit(self.max_windows).persist()
-
-        def train(pdf):
-            import numpy as np
-            import pandas as pd
-
-            from paqarin_spark.generators import nn
-
-            pdf = pdf.sort_values("_window_key")
-            seqs = np.array(
-                [
-                    [[rec[c] for c in cols] for rec in seq]
-                    for seq in pdf[SEQUENCE]
-                ],
-                dtype=np.float64,
-            )
+        def body(pdf):
             params = nn.train_gru(
-                seqs, hidden=hidden, epochs=epochs, lr=lr, seed=seed
+                _window_array(pdf, cols), hidden=hidden, epochs=epochs, lr=lr, seed=seed
             )
-            return pd.DataFrame(
-                {"weights": [json.dumps(nn.gru_params_to_lists(params))]}
-            )
+            return nn.gru_params_to_lists(params)
 
-        row = (
-            sample.withColumn("_g", F.lit(0))
-            .groupBy("_g")
-            .applyInPandas(train, schema="weights string")
-            .collect()
-        )
-        if not row:
-            sample.unpersist()
-            raise ValueError(
-                "cannot fit: no training windows (every entity is "
-                f"shorter than sequence_length={L})"
-            )
-        self.weights = json.loads(row[0]["weights"])
-        self._starts = sample
-        self._n_starts = sample.count()
-        return self
+        return body
 
-    def unpersist(self) -> None:
-        if self._starts is not None:
-            self._starts.unpersist()
+    def _rollout_body(self, n_cols, L, seed):
+        weights_json, noise, method = json.dumps(self.weights), self.noise, self.method
 
-    def generate(
-        self, number_of_sequences: int, seed: int | None = None
-    ) -> DataFrame:
-        if self.weights is None or self._starts is None:
-            raise RuntimeError("generator is not fitted")
-        n_starts = getattr(self, "_n_starts", None)
-        if n_starts is not None and number_of_sequences > n_starts:
-            raise ValueError(
-                f"number_of_sequences={number_of_sequences} exceeds the "
-                f"fitted start pool ({n_starts}); refit with a larger "
-                "max_windows to draw more"
-            )
-        seed = self.parameters.seed if seed is None else seed
-        schema = self.parameters.schema
-        cols = list(schema.value_columns)
-        L = self.parameters.sequence_length
-        weights_json = json.dumps(self.weights)
-        ranges = {c: self.scaler.state.column_range[c] for c in cols}
-        noise = self.noise
-
-        ranked = self._starts.withColumn(
-            "_rs",
-            F.md5(F.concat_ws("#", F.col("_window_key"), F.lit(str(seed)))),
-        )
-        picked = (
-            ranked.orderBy("_rs")
-            .limit(number_of_sequences)
-            .select(
-                (F.row_number().over(Window.orderBy("_rs")) - 1).alias(
-                    SEQUENCE_ID
-                ),
-                SEQUENCE,
-            )
-        )
-
-        def rollout(batches):
-            import numpy as np
-            import pandas as pd
-
-            from paqarin_spark.generators import nn
-            from paqarin_spark.generators.nn import _md5_unit
-
+        def make():
             params = nn.gru_params_from_lists(json.loads(weights_json))
-            for pdf in batches:
-                out_rows = []
-                for sid, seq in zip(pdf[SEQUENCE_ID], pdf[SEQUENCE]):
-                    # warm the hidden state on the context window
-                    # (teacher-forced), then free-run L steps — the
-                    # state carries through the WHOLE rollout, the
-                    # recurrent capability this class exists for
-                    h = np.zeros((1, params["wh"].shape[0]))
-                    y = None
-                    for rec in seq[: L - 1]:
-                        x = np.array(
-                            [[rec[c] for c in cols]], dtype=np.float64
-                        )
-                        y, h = nn.gru_step(params, x, h)
-                    gen_rows = []
-                    for step in range(L):
-                        pred = y[0].copy()
-                        if noise > 0.0:
-                            for j in range(len(cols)):
-                                u1 = max(
-                                    _md5_unit(
-                                        f"grunet-u1#{sid}#{step}#{j}#{seed}"
-                                    ),
-                                    1e-18,
-                                )
-                                u2 = _md5_unit(
-                                    f"grunet-u2#{sid}#{step}#{j}#{seed}"
-                                )
-                                z = (-2.0 * np.log(u1)) ** 0.5 * np.cos(
-                                    2.0 * np.pi * u2
-                                )
-                                pred[j] += noise * z
-                        gen_rows.append([float(v) for v in pred])
-                        y, h = nn.gru_step(
-                            params,
-                            np.array([gen_rows[-1]], dtype=np.float64),
-                            h,
-                        )
-                    out_rows.append(
-                        {
-                            SEQUENCE_ID: int(sid),
-                            SEQUENCE: [
-                                {
-                                    c: sv[j]
-                                    * (ranges[c][1] - ranges[c][0])
-                                    + ranges[c][0]
-                                    for j, c in enumerate(cols)
-                                }
-                                for sv in gen_rows
-                            ],
-                        }
-                    )
-                yield pd.DataFrame(out_rows, columns=[SEQUENCE_ID, SEQUENCE])
 
-        struct = ", ".join(f"{c}: double" for c in cols)
-        return picked.mapInPandas(
-            rollout,
-            schema=f"{SEQUENCE_ID} long, {SEQUENCE} array<struct<{struct}>>",
-        )
+            def sequence(sid, ctx):
+                # warm the hidden state on the context window
+                # (teacher-forced), then free-run L steps — the state
+                # carries through the WHOLE rollout, the recurrent
+                # capability this class exists for
+                h = np.zeros((1, params["wh"].shape[0]))
+                y = None
+                for row in ctx:
+                    y, h = nn.gru_step(params, np.array([row], dtype=np.float64), h)
+                gen = []
+                for step in range(L):
+                    pred = y[0].copy()
+                    _add_noise(pred, noise, method, sid, step, seed)
+                    gen.append([float(v) for v in pred])
+                    y, h = nn.gru_step(params, np.array([gen[-1]], dtype=np.float64), h)
+                return gen
 
-    def save(self, path: str) -> None:
-        if self.weights is None or self._starts is None:
-            raise RuntimeError("generator is not fitted")
-        spark = self._starts.sparkSession
-        _write_params(
-            path,
-            self.parameters,
-            {
-                "provider": self.provider,
-                "method": self.method,
-                "hidden": self.hidden,
-                "epochs": self.epochs,
-                "learning_rate": self.learning_rate,
-                "max_windows": self.max_windows,
-                "noise": self.noise,
-                "weights": self.weights,
-            },
-            spark=spark,
-        )
-        self.scaler.state.save(os.path.join(path, "scaler.json"), spark=spark)
-        self._starts.write.mode("overwrite").parquet(
-            os.path.join(path, "starts.parquet")
-        )
+            return sequence
 
-    @classmethod
-    def load(cls, spark: SparkSession, path: str) -> "GRUNetGenerator":
-        params, extra = _read_params(path, spark=spark)
-        gen = cls(
-            params,
-            hidden=int(extra.get("hidden", 12)),
-            epochs=int(extra.get("epochs", 150)),
-            learning_rate=float(extra.get("learning_rate", 0.08)),
-            max_windows=int(extra.get("max_windows", 512)),
-            noise=float(extra.get("noise", 0.0)),
-        )
-        gen.weights = extra["weights"]
-        gen.scaler.state = MinMaxState.load(
-            os.path.join(path, "scaler.json"), spark=spark
-        )
-        gen._starts = spark.read.parquet(os.path.join(path, "starts.parquet"))
-        gen._n_starts = gen._starts.count()
-        return gen
+        return make

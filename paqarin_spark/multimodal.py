@@ -13,6 +13,8 @@ every schema column a record leaves out and keeps the schema's column
 order. The eleven ``*_from_ids`` builders pass ``ids=`` and receive
 each id as an int after :func:`_spread_ids` (the only exchange any of
 these functions adds); every other function receives the input row.
+A NULL id names nothing: the ``*_from_ids`` builders and the tar/zip
+shard writers drop it.
 NULL or unreadable content: ``decode_media``, ``png_pixel_stats``,
 ``jpeg_pixel_stats`` and ``wav_audio_stats`` emit the asset with NULL
 stats; ``gif_pixel_stats``, ``wav_dft_features``,
@@ -572,8 +574,9 @@ def _spread_ids(df: DataFrame, id_column: str) -> DataFrame:
     per-asset codec stage: a single-file parquet scan arrives as ONE
     partition, which would serialize every encode/decode onto one
     core. The exchange moves only the id column (bytes per row), and
-    hash partitioning on the id keeps placement deterministic."""
-    ids = df.select(id_column)
+    hash partitioning on the id keeps placement deterministic. NULL
+    ids are dropped: there is no asset to build for them."""
+    ids = df.select(id_column).where(F.col(id_column).isNotNull())
     par = max(int(ids.sparkSession.sparkContext.defaultParallelism), 1)
     return ids.repartition(par, F.col(id_column))
 
@@ -2418,7 +2421,8 @@ def tar_shards_from_docs(
     multimodal/text training loaders stream (one sequential read per
     shard, no per-file filesystem ops). Member names are the zero-
     padded doc id + ``.txt``; members are sorted by id within a shard
-    so the archive bytes are layout-independent.
+    so the archive bytes are layout-independent. A doc with a NULL id
+    is dropped (a member is named by its id).
 
     Scale posture: ONE groupBy on the shard key; each task builds one
     shard's bytes in memory — the writer's contract is that the
@@ -2443,7 +2447,8 @@ def _write_shards(
     """The shard writer behind tar/zip_shards_from_docs: one groupBy on
     ``id % num_shards``; each group's docs, sorted by id, become
     ``(zero-padded id + '.txt', utf-8 text)`` members (NULL text packs
-    as empty) and ``encode(members)`` is that shard's content."""
+    as empty) and ``encode(members)`` is that shard's content. Docs
+    with a NULL id are dropped: a member is named by its id."""
     if num_shards < 1:
         raise ValueError("num_shards must be >= 1")
 
@@ -2460,7 +2465,7 @@ def _write_shards(
             }
         )
 
-    staged = df.select(
+    staged = df.where(F.col(id_column).isNotNull()).select(
         F.col(id_column).cast("long").alias("_id"),
         F.col(text_column).alias("_text"),
         (F.col(id_column) % num_shards).cast("int").alias("_shard"),
@@ -2645,7 +2650,8 @@ def zip_shards_from_docs(
     trade tar cannot make). Same scale posture: one groupBy on the
     shard key, each task builds one shard, nothing passes through the
     driver; member names are the zero-padded doc id + ``.txt`` sorted
-    by id, so shard bytes are layout-independent."""
+    by id, so shard bytes are layout-independent, and a doc with a
+    NULL id is dropped."""
     if method not in ("stored", "deflate"):
         raise ValueError(f"method must be stored|deflate, got {method!r}")
     return _write_shards(

@@ -18641,6 +18641,65 @@ def gen12_gan_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("sequence_id", "step")
 
 
+def _replay_bounds(spark: SparkSession, sf_dir: str):
+    """The non-NULL events and their min/max bounds ``_mn``/``_mx``
+    (one scalar aggregate) — the scale the gen13–15 replays invert."""
+    ev = _events(spark, sf_dir).where(F.col("value").isNotNull())
+    return ev, ev.agg(F.min("value").alias("_mn"), F.max("value").alias("_mx"))
+
+
+def _replay_starts(
+    spark: SparkSession, sf_dir: str, n_ctx: int, tag: str, nseq: int
+) -> DataFrame:
+    """The start frame of the gen13/gen15 rollout replays: each user's
+    first ``n_ctx`` non-NULL values by (ts, event_id) (users with fewer
+    are skipped), the ``nseq`` users first by md5(``tag`` || user_id),
+    numbered 0.. as ``sequence_id``, with the min-max scaled context
+    ``_xs`` next to the bounds ``_mn``/``_mx``."""
+    ev, b = _replay_bounds(spark, sf_dir)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    ctx = (
+        ev.select("user_id", "ts", "event_id", "value")
+        .withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= n_ctx)
+        .groupBy("user_id")
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct("_rn", "value"))
+            ).alias("_a"),
+            F.count(F.lit(1)).alias("_n"),
+        )
+        .where(F.col("_n") == n_ctx)
+        .select(
+            "user_id",
+            F.transform("_a", lambda s: s["value"]).alias("_ctx"),
+        )
+    )
+    ranked = ctx.withColumn(
+        "_r",
+        F.md5(F.concat(F.lit(tag), F.col("user_id").cast("string"))),
+    )
+    picked = (
+        ranked.orderBy("_r")
+        .limit(nseq)
+        .select(
+            (F.row_number().over(Window.orderBy("_r")) - 1)
+            .cast("long")
+            .alias("sequence_id"),
+            "_ctx",
+        )
+    )
+    return picked.crossJoin(F.broadcast(b)).select(
+        "sequence_id",
+        F.transform(
+            "_ctx",
+            lambda v: (v - F.col("_mn")) / (F.col("_mx") - F.col("_mn")),
+        ).alias("_xs"),
+        "_mn",
+        "_mx",
+    )
+
+
 _GEN13_HIDDEN = 4
 _GEN13_SEED = 13
 _GEN13_WARM = 7
@@ -18655,8 +18714,8 @@ def gen13_gru_rollout_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared code with gen10's fit) is FROZEN (no BPTT), each picked
     user's first 7 min-max-scaled event values warm the hidden state,
     and the GRU then free-runs 8 steps feeding its own predictions
-    back — the exact rollout orchestration of
-    GRUNetGenerator.generate (generators/recurrent.py:176), driven
+    back — the exact rollout orchestration of GRUNetGenerator
+    (``_rollout_body`` in generators/recurrent.py), driven
     through nn.gru_step_strict, the strict-left-fold/libm twin of
     the BLAS gru_step kernel. The oracle replays the full recurrence
     in a recursive CTE with the weights shipped as literals (the
@@ -18681,49 +18740,7 @@ def gen13_gru_rollout_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure_for_determinism(spark)
     H, seed = _GEN13_HIDDEN, _GEN13_SEED
     warm, free, nseq = _GEN13_WARM, _GEN13_FREE, _GEN13_NSEQ
-    ev = _events(spark, sf_dir).where(F.col("value").isNotNull())
-    b = ev.agg(F.min("value").alias("_mn"), F.max("value").alias("_mx"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ctx = (
-        ev.select("user_id", "ts", "event_id", "value")
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= warm)
-        .groupBy("user_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("_rn", "value"))
-            ).alias("_a"),
-            F.count(F.lit(1)).alias("_n"),
-        )
-        .where(F.col("_n") == warm)
-        .select(
-            "user_id",
-            F.transform("_a", lambda s: s["value"]).alias("_ctx"),
-        )
-    )
-    ranked = ctx.withColumn(
-        "_r",
-        F.md5(F.concat(F.lit("g13u#"), F.col("user_id").cast("string"))),
-    )
-    picked = (
-        ranked.orderBy("_r")
-        .limit(nseq)
-        .select(
-            (F.row_number().over(Window.orderBy("_r")) - 1)
-            .cast("long")
-            .alias("sequence_id"),
-            "_ctx",
-        )
-    )
-    scaled = picked.crossJoin(F.broadcast(b)).select(
-        "sequence_id",
-        F.transform(
-            "_ctx",
-            lambda v: (v - F.col("_mn")) / (F.col("_mx") - F.col("_mn")),
-        ).alias("_xs"),
-        "_mn",
-        "_mx",
-    )
+    scaled = _replay_starts(spark, sf_dir, warm, "g13u#", nseq)
     wlists = nn.gru_params_to_lists(nn.init_gru_params(1, H, 1, seed))
 
     def rollout(batches):
@@ -18887,13 +18904,14 @@ def gen14_gan_sample_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     (generators.nn.init_params, shared code with gen12's train_gan)
     is FROZEN (no adversarial steps), each sequence draws its noise
     vector with the exact keying GANWindowGenerator.generate uses
-    (``gan-gen#{seed}#{sid}#{j}``, adversarial.py:182), and the
-    generator net — tanh hidden, SIGMOID output, the gan_sample
-    forward (nn.py:459) — maps z to an 8-step window in (0,1) that
-    inverse-min-max-scales against the events bounds. The rollout
-    drives nn.mlp_forward_strict, the strict-left-fold/libm twin of
-    the BLAS forward, so the oracle replays every expression
-    token-for-token as plain (non-recursive) SQL — noise hashing,
+    (``gan-gen#{seed}#{sid}#{j}``, GANWindowGenerator's
+    ``_rollout_body``), and the generator net — tanh hidden, SIGMOID
+    output, the nn.gan_sample forward — maps z to an 8-step window
+    in (0,1) that inverse-min-max-scales against the events bounds.
+    The rollout drives nn.mlp_forward_strict, the
+    strict-left-fold/libm twin of the BLAS forward, so the oracle
+    replays every expression token-for-token as plain
+    (non-recursive) SQL — noise hashing,
     both layers, sigmoid, inverse scaling. With gen13 this closes the
     sample half of BOTH executing neural classes: training (the
     adversarial game / BPTT) remains the only rows-only boundary,
@@ -18913,8 +18931,7 @@ def gen14_gan_sample_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure_for_determinism(spark)
     nz, hg, L = _GEN14_NZ, _GEN14_HG, _GEN14_L
     nseq, seed = _GEN14_NSEQ, _GEN14_SEED
-    ev = _events(spark, sf_dir).where(F.col("value").isNotNull())
-    b = ev.agg(F.min("value").alias("_mn"), F.max("value").alias("_mx"))
+    _, b = _replay_bounds(spark, sf_dir)
     sids = spark.range(nseq).select(F.col("id").alias("sequence_id"))
     g_lists = nn.params_to_lists(nn.init_params([nz, hg, L], seed))
 
@@ -19031,7 +19048,7 @@ def gen15_arnet_rollout_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-hidden-layer AR MLP then free-runs 8 steps feeding its own
     predictions back through the sliding context — the exact rollout
     orchestration of ARNetGenerator.generate with noise=0
-    (generators/neural.py:297: ctx = ctx[1:] + [pred]), driven
+    (ARNetGenerator's ``_rollout_body``: ctx = ctx[1:] + [pred]), driven
     through nn.mlp_forward_strict, the strict-left-fold/libm twin of
     the BLAS forward. The oracle replays the full recurrence in a
     recursive CTE with the weights as literals, so the hash match
@@ -19052,49 +19069,7 @@ def gen15_arnet_rollout_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure_for_determinism(spark)
     H, seed = _GEN15_HIDDEN, _GEN15_SEED
     ctxn, free, nseq = _GEN15_CTX, _GEN15_FREE, _GEN15_NSEQ
-    ev = _events(spark, sf_dir).where(F.col("value").isNotNull())
-    b = ev.agg(F.min("value").alias("_mn"), F.max("value").alias("_mx"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ctx = (
-        ev.select("user_id", "ts", "event_id", "value")
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= ctxn)
-        .groupBy("user_id")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("_rn", "value"))
-            ).alias("_a"),
-            F.count(F.lit(1)).alias("_n"),
-        )
-        .where(F.col("_n") == ctxn)
-        .select(
-            "user_id",
-            F.transform("_a", lambda s: s["value"]).alias("_ctx"),
-        )
-    )
-    ranked = ctx.withColumn(
-        "_r",
-        F.md5(F.concat(F.lit("g15u#"), F.col("user_id").cast("string"))),
-    )
-    picked = (
-        ranked.orderBy("_r")
-        .limit(nseq)
-        .select(
-            (F.row_number().over(Window.orderBy("_r")) - 1)
-            .cast("long")
-            .alias("sequence_id"),
-            "_ctx",
-        )
-    )
-    scaled = picked.crossJoin(F.broadcast(b)).select(
-        "sequence_id",
-        F.transform(
-            "_ctx",
-            lambda v: (v - F.col("_mn")) / (F.col("_mx") - F.col("_mn")),
-        ).alias("_xs"),
-        "_mn",
-        "_mx",
-    )
+    scaled = _replay_starts(spark, sf_dir, ctxn, "g15u#", nseq)
     wlists = nn.params_to_lists(nn.init_params([ctxn, H, 1], seed))
 
     def rollout(batches):

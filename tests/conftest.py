@@ -31,3 +31,23 @@ def timeseries_df(spark):
         ("item_2", ts("2020-01-04 00:00:00"), None),  # NULL value
     ]
     return spark.createDataFrame(rows, "item_id string, timestamp timestamp, value double")
+
+
+@pytest.fixture(scope="session")
+def weights_digest():
+    """sha256 of a JSON-able weight state with every float rounded to 9
+    decimals: pins a fitted model across refactors without depending
+    on the last bit of a BLAS reduction."""
+    import hashlib
+    import json
+
+    def rounded(o):
+        if isinstance(o, float):
+            return round(o, 9)
+        if isinstance(o, list):
+            return [rounded(v) for v in o]
+        if isinstance(o, dict):
+            return {k: rounded(v) for k, v in o.items()}
+        return o
+
+    return lambda w: hashlib.sha256(json.dumps(rounded(w)).encode()).hexdigest()

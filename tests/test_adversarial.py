@@ -12,6 +12,7 @@ integration."""
 from __future__ import annotations
 
 import datetime as dt
+import json
 import math
 
 import pytest
@@ -106,7 +107,7 @@ def test_gan_discriminator_loss_descends_without_collapse():
     assert losses[-1] > 0.4, losses[-1]
 
 
-def test_gan_lifecycle_and_determinism(sine_panel, tmp_path):
+def test_gan_lifecycle_and_determinism(sine_panel, tmp_path, weights_digest):
     """fit → generate → save → load → generate-equal, and two fits
     from different layouts produce identical weights (the
     ARNet/GRUNet layout-independence contract)."""
@@ -127,8 +128,17 @@ def test_gan_lifecycle_and_determinism(sine_panel, tmp_path):
         sine_panel.repartition(7)
     )
     assert gen.weights == gen2.weights
+    assert weights_digest(gen.weights) == (
+        "49e885569951cbba78c6fd99723f2c660dff567adbc0de6036c5a24d8d2c0db5"
+    )
     path = str(tmp_path / "gan_model")
     gen.save(path)
+    with open(f"{path}/generator.json", encoding="utf-8") as fh:
+        assert sorted(json.load(fh)) == [
+            "epochs", "hidden_d", "hidden_g", "lr_d", "lr_g", "max_windows",
+            "method", "noise_dim", "provider", "provider_options", "schema",
+            "seed", "sequence_length", "weights",
+        ]
     loaded = GANWindowGenerator.load(sine_panel.sparkSession, path)
     assert loaded.weights == gen.weights
     a = [
@@ -139,6 +149,53 @@ def test_gan_lifecycle_and_determinism(sine_panel, tmp_path):
         for r in loaded.generate(4, seed=1).orderBy("sequence_id").collect()
     ]
     assert a == b
+
+
+# generator.json and scaler.json of a 3-epoch GAN (noise_dim=1,
+# hidden_g=2, hidden_d=1, sequence_length=2, seed=4) as the
+# per-provider save() wrote them before the windowed base existed
+_SIDECAR_GENERATOR_JSON = (
+    '{"schema": {"item_id_columns": ["item_id"], '
+    '"timestamp_column": "ts", "value_columns": ["v"], '
+    '"attribute_columns": [], "frequency": "D", "date_format": null, '
+    '"order_columns": []}, "sequence_length": 2, "seed": 4, '
+    '"provider_options": {}, "provider": "paqarin_spark", '
+    '"method": "gan", "noise_dim": 1, "hidden_g": 2, "hidden_d": 1, '
+    '"epochs": 3, "lr_g": 1.0, "lr_d": 0.5, "max_windows": 256, '
+    '"weights": {"g": [{"w": [[-0.3418550341388047, '
+    '0.7127054804659142]], "b": [0.019143897888499947, '
+    '0.020557725803293514]}, {"w": [[0.6247902765498968, '
+    '0.37970522102099846], [0.6852049875295644, 0.757660655372139]], '
+    '"b": [0.02803604672743772, 0.006274087368514301]}], '
+    '"d": [{"w": [[0.5799919668831146], [0.12730665000626]], '
+    '"b": [-0.02485716957040747]}, {"w": [[0.12449483528492764]], '
+    '"b": [-0.14581438870039723]}], '
+    '"d_loss_first": 1.3883279053647466, '
+    '"d_loss_last": 1.3883033506919396}}'
+)
+_SIDECAR_SCALER_JSON = '{"v": [-0.9749279121818248, 0.9749279121818255]}'
+
+
+def test_gan_loads_sidecar_in_earlier_layout(spark, tmp_path):
+    """A model saved in the earlier per-provider layout loads with its
+    stored hyperparameters and weights and samples the same values."""
+    from paqarin_spark.generators import GANWindowGenerator
+
+    (tmp_path / "generator.json").write_text(_SIDECAR_GENERATOR_JSON)
+    (tmp_path / "scaler.json").write_text(_SIDECAR_SCALER_JSON)
+    gen = GANWindowGenerator.load(spark, str(tmp_path))
+    assert gen.is_fitted
+    assert (gen.noise_dim, gen.hidden_g, gen.hidden_d, gen.epochs) == (1, 2, 1, 3)
+    assert (gen.lr_g, gen.lr_d, gen.max_windows) == (1.0, 0.5, 256)
+    assert gen.weights == json.loads(_SIDECAR_GENERATOR_JSON)["weights"]
+    out = gen.generate(2, seed=1).orderBy("sequence_id").collect()
+    assert [[round(s["v"], 9) for s in r["sequence"]] for r in out] == [
+        [-0.065638599, -0.126604113],
+        [0.06049398, 0.065511699],
+    ]
+    gen.save(str(tmp_path / "resaved"))
+    resaved = (tmp_path / "resaved" / "generator.json").read_text()
+    assert resaved == _SIDECAR_GENERATOR_JSON
 
 
 def test_gan_via_adapter_and_tstr_pipeline(sine_panel):

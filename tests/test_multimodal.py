@@ -1336,6 +1336,28 @@ def test_member_readers_pass_null_shard_id_through(spark):
         ]
 
 
+def test_null_ids_are_dropped_by_id_builders_and_shard_writers(spark):
+    """A NULL id names no asset and no archive member: the ``ids=`` leg
+    of the record lane and the shard writers drop it instead of
+    failing the task on ``int(NaN)``."""
+    from paqarin_spark.multimodal import (
+        png_assets_from_ids,
+        tar_members_table,
+        tar_shards_from_docs,
+    )
+
+    ids = spark.createDataFrame([(None,), (2,)], "asset_id long")
+    assets = png_assets_from_ids(ids, "asset_id")
+    assert [r["asset_id"] for r in assets.collect()] == [2]
+    docs = spark.createDataFrame(
+        [(None, "x"), (1, "y")], "doc_id long, text string"
+    )
+    members = tar_members_table(tar_shards_from_docs(docs, "doc_id", "text", 2))
+    assert [(r["shard_id"], r["name"]) for r in members.collect()] == [
+        (1, "000000000001.txt")
+    ]
+
+
 def test_extract_features_rejects_dim_outside_digest(spark):
     """Feature values index a 32-byte sha256 digest, so ``dim`` must be
     in 1..32; the check runs at call time, not in a worker."""

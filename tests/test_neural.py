@@ -7,6 +7,7 @@ lifecycle (fit → generate → save → load → generate-equal)."""
 from __future__ import annotations
 
 import datetime as dt
+import json
 import math
 
 import pytest
@@ -92,10 +93,13 @@ def test_arnet_rollout_tracks_sine_dynamics(sine_panel):
     gen.unpersist()
 
 
-def test_arnet_deterministic_across_layouts(sine_panel):
+def test_arnet_deterministic_across_layouts(sine_panel, weights_digest):
     g1 = ARNetGenerator(_params(), epochs=80).fit(sine_panel)
     g2 = ARNetGenerator(_params(), epochs=80).fit(sine_panel.repartition(16))
     assert g1.weights == g2.weights
+    assert weights_digest(g1.weights) == (
+        "0e271e037d09a6ffeb6779fa5a7e7ebd33aa7cc23ffa2995ce4fe40322df570f"
+    )
     s1 = [
         (r["sequence_id"], tuple(round(s["v"], 9) for s in r["sequence"]))
         for r in g1.generate(5, seed=3).orderBy("sequence_id").collect()
@@ -113,6 +117,12 @@ def test_arnet_save_load_roundtrip(sine_panel, tmp_path):
     gen = ARNetGenerator(_params(), epochs=80).fit(sine_panel)
     path = str(tmp_path / "arnet_model")
     gen.save(path)
+    with open(f"{path}/generator.json", encoding="utf-8") as fh:
+        assert sorted(json.load(fh)) == [
+            "epochs", "hidden", "learning_rate", "max_windows", "method",
+            "noise", "provider", "provider_options", "rounds", "schema",
+            "seed", "sequence_length", "shards", "weights",
+        ]
     loaded = ARNetGenerator.load(sine_panel.sparkSession, path)
     assert loaded.is_fitted
     assert loaded.weights == gen.weights
@@ -274,7 +284,7 @@ def test_average_params_is_example_weighted_and_order_free():
         nn.average_params([(0, a)])
 
 
-def test_parameter_averaged_fit_is_layout_independent(sine_panel):
+def test_parameter_averaged_fit_is_layout_independent(sine_panel, weights_digest):
     """Local-SGD training shards by a CONTENT hash of the window key,
     so the fitted weights are a pure function of the data — identical
     across any input partitioning."""
@@ -287,6 +297,9 @@ def test_parameter_averaged_fit_is_layout_independent(sine_panel):
         gen = ARNetGenerator(
             _params(), hidden=8, epochs=40, shards=3, rounds=2
         ).fit(sine_panel.repartition(parts))
+        assert weights_digest(gen.weights) == (
+            "0d47d179f32a315a5825d127698bd0496200700941f27d46dbec8cd938f6f056"
+        )
         fits.append(nn.params_from_lists(gen.weights))
         gen.unpersist()
     for p0, p1 in zip(*fits):
@@ -320,6 +333,42 @@ def test_parameter_averaged_fit_learns_dynamics(sine_panel):
     y = np.array([[r["sequence"][7]["v"]] for r in wins])
     assert nn.mse(trained, x, y) < 0.25 * nn.mse(init, x, y)
     gen.unpersist()
+
+
+def test_arnet_rounds_apply_at_one_shard(sine_panel):
+    """``rounds`` splits the epochs into parameter-averaged rounds with
+    momentum restarting each round, at any shard count — so with a
+    single shard, two rounds train a different model from one."""
+    fits = [
+        ARNetGenerator(_params(), hidden=8, epochs=40, rounds=r).fit(sine_panel)
+        for r in (1, 2)
+    ]
+    assert fits[0].weights != fits[1].weights
+    for gen in fits:
+        gen.unpersist()
+
+
+def test_windowed_providers_reject_schema_without_value_columns(spark):
+    """ARNet, GRUNet and GAN share one fit preamble: a schema with no
+    value columns is a ValueError before any Spark job runs."""
+    from paqarin_spark.generators import GANWindowGenerator, GRUNetGenerator
+
+    schema = TimeSeriesSchema(
+        item_id_columns=("item_id",), timestamp_column="ts", value_columns=()
+    )
+    df = spark.createDataFrame(
+        [("e0", dt.datetime(2020, 1, 1))], "item_id string, ts timestamp"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("no-value-columns", "windowed providers without values")
+    try:
+        for cls in (ARNetGenerator, GRUNetGenerator, GANWindowGenerator):
+            gen = cls(GeneratorParameters(schema=schema, sequence_length=4))
+            with pytest.raises(ValueError, match="no value columns"):
+                gen.fit(df)
+        assert sc.statusTracker().getJobIdsForGroup("no-value-columns") == []
+    finally:
+        sc._jsc.clearJobGroup()
 
 
 def test_average_params_equal_n_shards_are_order_free():
@@ -452,7 +501,7 @@ def test_gru_beats_feedforward_on_long_memory_delay_line():
     assert gru_mse < 0.1 * mlp_mse, (gru_mse, mlp_mse)
 
 
-def test_grunet_lifecycle_and_determinism(sine_panel, tmp_path):
+def test_grunet_lifecycle_and_determinism(sine_panel, tmp_path, weights_digest):
     """fit -> generate -> save -> load -> generate-equal, and two fits
     from the same data produce identical weights (layout-independent,
     the ARNet contract)."""
@@ -468,8 +517,17 @@ def test_grunet_lifecycle_and_determinism(sine_panel, tmp_path):
     repartitioned = sine_panel.repartition(7)
     gen2 = GRUNetGenerator(_params(), hidden=8, epochs=60).fit(repartitioned)
     assert gen.weights == gen2.weights
+    assert weights_digest(gen.weights) == (
+        "7f1ae76f17a4fcda452711a435f62784a73c07007f348949b3ad11ad67adb5a4"
+    )
     path = str(tmp_path / "grunet_model")
     gen.save(path)
+    with open(f"{path}/generator.json", encoding="utf-8") as fh:
+        assert sorted(json.load(fh)) == [
+            "epochs", "hidden", "learning_rate", "max_windows", "method",
+            "noise", "provider", "provider_options", "schema", "seed",
+            "sequence_length", "weights",
+        ]
     loaded = GRUNetGenerator.load(sine_panel.sparkSession, path)
     assert loaded.weights == gen.weights
     a = [
